@@ -16,7 +16,6 @@ call sites (both write text values).
 from __future__ import annotations
 
 from collections.abc import Sequence
-from itertools import chain
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -59,14 +58,3 @@ def json_has_any_key(json_col: Column, keys: Sequence[str]) -> Column:
         F.lit(False),
     )
 
-
-def json_rebuild_struct(json_col: Column, fields: dict[str, T.DataType]) -> Column:
-    """Typed struct re-projection of selected top-level keys — the Spark
-    twin of the reference's ``pd.json_normalize`` + per-column casts
-    (scripts.py:477-523). ANSI-safe via try_cast."""
-    m = _as_map(json_col)
-    return F.struct(
-        *chain(
-            [m[F.lit(k)].try_cast(dt).alias(k) for k, dt in fields.items()]
-        )
-    )

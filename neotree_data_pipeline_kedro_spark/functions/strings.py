@@ -115,12 +115,6 @@ def sanitize_sql_name(name: str) -> str:
     return re.sub(r"[()\-]", "_", name)
 
 
-def sanitize_json_key(name: str) -> str:
-    """JSON key sanitizer ``re.sub(r'[^A-Za-z0-9_ ]+','')``
-    (json_restructure.py:72-81)."""
-    return re.sub(r"[^A-Za-z0-9_ ]+", "", name)
-
-
 # American Soundex letter→code map (A..Z): vowels + H/W/Y → 0,
 # BFPV→1, CGJKQSXZ→2, DT→3, L→4, MN→5, R→6.
 _SOUNDEX_MAP = "01230120022455012623010202"

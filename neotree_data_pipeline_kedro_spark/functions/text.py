@@ -287,17 +287,6 @@ def chunk_tokens(col: Column | str, size: int, overlap: int = 0) -> Column:
     return F.when(n <= 0, empty).otherwise(win)
 
 
-def rolling_hash(col: Column | str, mod: int = 2147483647, base: int = 31) -> Column:
-    """Polynomial rolling hash over characters (library fingerprint for
-    shingling; no SQL oracle — verified against a Python twin in tests)."""
-    chars = F.split(F.coalesce(_col(col), F.lit("")), "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("bigint"),
-        lambda acc, ch: (acc * base + F.ascii(ch)) % mod,
-    )
-
-
 def weighted_median_udaf():
     """GROUPED_AGG pandas UDF computing an exact weighted median —
     the Arrow-batched aggregation path (pandas_udf) the rest of the

@@ -21,100 +21,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),  # image|audio|video
-        T.StructField("format", T.StringType()),  # png|jpeg|wav|mp4|...
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-    ]
-)
-
-# magic-byte prefixes → format (pure column expressions; no decode needed)
-_MAGIC = {
-    "89504E47": "png",
-    "FFD8FF": "jpeg",
-    "47494638": "gif",
-    "52494646": "riff",  # wav/avi container
-    "1A45DFA3": "mkv",
-    "66747970": "mp4",  # at offset 4; handled below
-}
-
-
-def sniff_format(df: DataFrame, binary_col: str, out_col: str = "format") -> DataFrame:
-    """Detect container format from magic bytes — expression-only, runs in
-    the scan stage, no Python."""
-    head = F.upper(F.hex(F.substring(F.col(binary_col), 1, 8)))
-    expr = F.lit(None).cast("string")
-    chain = F.when(head.startswith("89504E47"), "png")
-    chain = chain.when(head.startswith("FFD8FF"), "jpeg")
-    chain = chain.when(head.startswith("47494638"), "gif")
-    chain = chain.when(head.startswith("52494646"), "riff")
-    chain = chain.when(head.startswith("1A45DFA3"), "mkv")
-    chain = chain.when(F.substring(head, 9, 8) == "66747970", "mp4").otherwise(expr)
-    return df.withColumn(out_col, chain)
-
-
-def media_metadata(df: DataFrame, binary_col: str, out_col: str = "meta") -> DataFrame:
-    """Cheap metadata without decoding: byte length + sniffed format."""
-    sniffed = sniff_format(df, binary_col, "__fmt")
-    return sniffed.withColumn(
-        out_col,
-        F.struct(
-            F.lit(None).cast("string").alias("media_type"),
-            F.col("__fmt").alias("format"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("bigint").alias("duration_ms"),
-            F.length(F.col(binary_col)).cast("bigint").alias("n_bytes"),
-        ),
-    ).drop("__fmt")
-
-
-def _fake_image_features(payload: bytes, dim: int = 16) -> list[float]:
-    """Deterministic byte-histogram features — the model-inference stand-in
-    (an encoder model is the one piece that has no stdlib equivalent); the
-    batch shape and schema are what production code would use."""
-    if payload is None:
-        return [0.0] * dim
-    counts = [0] * dim
-    for b in payload[:4096]:
-        counts[b % dim] += 1
-    total = max(sum(counts), 1)
-    return [c / total for c in counts]
-
-
-IMAGE_FEATURES_SCHEMA = "id bigint, features array<double>"
-
-
-def extract_image_features(
-    df: DataFrame, id_col: str, binary_col: str, dim: int = 16
-) -> DataFrame:
-    """Arrow-batched feature extraction over mapInPandas.
-
-    Production: swap ``_fake_image_features`` for a real decoder/encoder
-    (PIL + model). Batches stream through Arrow; memory is bounded by
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``.
-    """
-    src = df.select(F.col(id_col).alias("id"), F.col(binary_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "features": [
-                        _fake_image_features(p, dim) for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return src.mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
-
 
 DECODED_SCHEMA = (
     "id bigint, width int, height int, channels int, "

@@ -13,7 +13,6 @@ any pairwise comparison — never an unblocked self-join.
 
 from __future__ import annotations
 
-import hashlib
 import re
 from collections.abc import Iterator
 
@@ -77,12 +76,6 @@ def _py_shingles(text: str | None, n: int) -> list[str]:
     if len(toks) < n:
         return [" ".join(toks)]
     return list({" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)})
-
-
-def _base_hash_u64(s: str) -> int:
-    """Strong deterministic 64-bit base hash (blake2b-8); permutations are
-    affine transforms of it, so each shingle is hashed once, not k times."""
-    return int.from_bytes(hashlib.blake2b(s.encode(), digest_size=8).digest(), "little")
 
 
 def _hash_str_block(strs: list[str]) -> np.ndarray:

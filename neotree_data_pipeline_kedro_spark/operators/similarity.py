@@ -1066,10 +1066,10 @@ def append_ann_index(
     sees them immediately because probes prune on the ``cell``
     partition column, which is shared by all batches).
 
-    Re-run-safe by the ``sources/warehouse.py`` rename-swap
-    discipline: the encoded delta is staged to an underscore-prefixed
-    sibling directory (invisible to parquet readers) and published
-    with ONE atomic ``os.rename`` into ``codes/batch=<batch_id>``; a
+    Re-run-safe by a staged publish: the encoded delta is staged to an
+    underscore-prefixed sibling directory (invisible to parquet readers)
+    and published with ONE atomic ``os.rename`` into
+    ``codes/batch=<batch_id>``; a
     crashed-and-retried batch finds its directory already published
     and skips the write entirely, so no delta row can land twice.
     (On object stores without atomic rename, publish through a
@@ -1204,8 +1204,10 @@ def retrain_ann_index(
     of the maintenance loop that ``maintain_ann_index``'s skew trigger
     schedules. Centroids come from a fresh distributed k-means over ALL
     vectors (base + every appended batch), codebooks from ``pq_train``
-    on the same corpus, and the full codes table is rebuilt and swapped
-    in with the tmp→old→live rename discipline per component.
+    on the same corpus, and the full codes table is rebuilt. Each
+    component is then replaced through sources/warehouse's directory
+    swap; a swap interrupted by a crash is recovered before anything is
+    read.
 
     After the swap the index answers ``ivfpq_topk`` EXACTLY as a
     from-scratch ``build_ivfpq_index`` over the current vector set
@@ -1221,6 +1223,11 @@ def retrain_ann_index(
     import os
     import shutil
 
+    from ..sources.warehouse import _publish_swap, _recover_swap, _swap_paths
+
+    comps = ("codes", "codebooks", "centroids")
+    for comp in comps:
+        _recover_swap(f"{path}/{comp}")
     vec_dir = f"{path}/vectors"
     vectors = spark.read.parquet(vec_dir).select(id_col, vec_col)
     if k is None:
@@ -1241,19 +1248,11 @@ def retrain_ann_index(
         shutil.rmtree(stage)  # crashed previous retrain: rebuild fully
     save_ann_index(index, books, cents, stage)
 
-    for comp in ("codes", "codebooks", "centroids"):
+    for comp in comps:
         live = f"{path}/{comp}"
-        old = f"{live}.__old"
-        if os.path.isdir(old):  # crashed mid-swap on a previous attempt
-            if os.path.isdir(live):
-                shutil.rmtree(old)
-            else:
-                os.rename(old, live)
-        if os.path.isdir(live):
-            os.rename(live, old)
-        os.rename(f"{stage}/{comp}", live)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
+        # the staged component becomes the swap's tmp sibling
+        os.rename(f"{stage}/{comp}", _swap_paths(live)[0])
+        _publish_swap(live)
     shutil.rmtree(stage)
 
 

@@ -196,12 +196,13 @@ def cascade_delete_keys(
     applying a hygiene pass; here the pass is a key purge).
 
     For each stage directory that has ``key_col``: LEFT ANTI join against
-    the broadcast key list (deletion lists are small by nature), rewrite
-    to a temp sibling, swap via two renames (same crash-safe shape as
-    compact_parquet — readers never see a half-written table). Stages
-    without the key column are skipped, not errored: a warehouse mixes
-    keyed facts and key-free rollups, and a purge must not stop at the
-    first summary table. Returns {stage: rows_deleted}.
+    the broadcast key list (deletion lists are small by nature), then
+    replace the stage through sources/warehouse's directory swap —
+    readers never see a half-written table, and a swap interrupted by a
+    crash (here or in compaction) is recovered before the stage is
+    read. Stages without the key column are skipped, not errored: a
+    warehouse mixes keyed facts and key-free rollups, and a purge must
+    not stop at the first summary table. Returns {stage: rows_deleted}.
 
     Scale shape: one anti-join scan-and-rewrite per stage, no wide
     shuffle (broadcast anti). At real scale prefer partition-aligned
@@ -209,13 +210,20 @@ def cascade_delete_keys(
     — the Z-order/sort clustering makes that pruning effective).
     """
     import os
-    import shutil
+
+    from ..sources.warehouse import (
+        _live_names,
+        _publish_swap,
+        _recover_swap,
+        _swap_paths,
+    )
 
     klist = keys.select(F.col(key_col).cast("string").alias("__del_key")).distinct()
     deleted: dict[str, int] = {}
-    names = stages if stages is not None else sorted(os.listdir(warehouse_dir))
+    names = stages if stages is not None else _live_names(warehouse_dir)
     for name in names:
         stage_dir = os.path.join(warehouse_dir, name)
+        _recover_swap(stage_dir)
         if not os.path.isdir(stage_dir):
             continue
         df = spark.read.parquet(stage_dir)
@@ -227,13 +235,10 @@ def cascade_delete_keys(
             df[key_col].cast("string") == F.col("__del_key"),
             "left_anti",
         )
-        tmp = stage_dir.rstrip("/") + ".__purge_tmp"
+        tmp = _swap_paths(stage_dir)[0]
         kept.write.mode("overwrite").parquet(tmp)
         after = spark.read.parquet(tmp).count()
-        old = stage_dir.rstrip("/") + ".__purge_old"
-        os.rename(stage_dir, old)
-        os.rename(tmp, stage_dir)
-        shutil.rmtree(old)
+        _publish_swap(stage_dir)
         deleted[name] = before - after
     return deleted
 

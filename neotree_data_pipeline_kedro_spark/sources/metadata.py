@@ -21,7 +21,6 @@ from collections.abc import Callable
 from pathlib import Path
 from typing import Any
 
-from pyspark.sql import SparkSession
 
 FieldMeta = dict[str, Any]
 ScriptMeta = dict[str, dict[str, FieldMeta]]
@@ -95,13 +94,6 @@ def numeric_ranges(meta: ScriptMeta) -> dict[str, tuple[float | None, float | No
             if f.get("minValue") is not None or f.get("maxValue") is not None:
                 out[k] = (f.get("minValue"), f.get("maxValue"))
     return out
-
-
-def broadcast_metadata(spark: SparkSession, meta: ScriptMeta):
-    """Broadcast the registry for UDF-side consumers (scripts.py's module
-    cache, but cluster-safe). Expression-side consumers (labels/redact)
-    should embed literal maps instead."""
-    return spark.sparkContext.broadcast(meta)
 
 
 # ---------------------------------------------------------------------------

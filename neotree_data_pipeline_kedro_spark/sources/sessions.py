@@ -369,12 +369,6 @@ def entry_rows(
     )
 
 
-def mcl_keys(rows: DataFrame) -> DataFrame:
-    """The session-set's MCL key list (the reference accumulates ``mcl``
-    across all rows then explodes those columns)."""
-    return rows.filter("is_mcl").select("key").distinct()
-
-
 def explode_mcl(
     rows: DataFrame,
     id_cols: tuple[str, ...] = ("uid",),

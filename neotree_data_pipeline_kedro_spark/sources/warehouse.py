@@ -18,6 +18,9 @@ shuffle at write time).
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,6 +74,58 @@ def write_partitioned(
     df.write.format(fmt).mode(mode).partitionBy(*partition_cols).save(path)
 
 
+# ------------------------------------------------------------------ swap
+# The package's one way to replace a directory in place (compaction, the
+# cascade purge, the streaming rollup/census state, the ANN re-train):
+# write the new contents to the ``<live>.__rollup_tmp`` sibling, then
+# (live -> ``.__rollup_old``) -> (tmp -> live) -> rm old. A crash at any
+# point leaves the live dir or its old sibling on disk, never neither;
+# every caller runs ``_recover_swap`` before it reads the live dir, which
+# renames a dangling old sibling back and purges stale leftovers. The
+# sibling names are fixed, so a leftover from any earlier run is still
+# found. Local filesystem only (os.rename).
+
+
+def _swap_paths(live: str) -> tuple[str, str]:
+    """The (tmp, old) siblings of ``live``."""
+    live = live.rstrip("/")
+    return live + ".__rollup_tmp", live + ".__rollup_old"
+
+
+def _recover_swap(live: str) -> None:
+    """Undo a swap interrupted by a crash: restore ``live`` from
+    its old sibling when the crash fell between the two renames, and
+    purge any other leftover."""
+    tmp, old = _swap_paths(live)
+    if os.path.isdir(old):
+        if os.path.isdir(live):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, live)
+    if os.path.isdir(tmp):
+        shutil.rmtree(tmp)
+
+
+def _publish_swap(live: str) -> None:
+    """Promote the fully-written tmp sibling to ``live`` (tmp must exist)."""
+    tmp, old = _swap_paths(live)
+    if os.path.isdir(live):
+        os.rename(live, old)
+        os.rename(tmp, live)
+        shutil.rmtree(old)
+    else:
+        os.rename(tmp, live)
+
+
+def _live_names(parent: str) -> list[str]:
+    """Sorted entry names under ``parent``, each swap sibling folded into
+    the name of the live directory it belongs to."""
+    tmp_sfx, old_sfx = _swap_paths("")
+    return sorted(
+        {n.removesuffix(tmp_sfx).removesuffix(old_sfx) for n in os.listdir(parent)}
+    )
+
+
 def compact_parquet(
     spark: SparkSession,
     path: str,
@@ -100,14 +155,14 @@ def compact_parquet(
     its first column (global clustering: non-overlapping file ranges,
     not just row-group-sorted files).
 
-    Writes to a sibling temp dir then swaps via two renames — readers
-    never see a half-written file set (they can race the brief window
-    between renames and retry; on object stores, prefer a manifest/catalog
-    pointer flip instead). Returns the new file count.
+    The rewrite replaces ``path`` through the directory swap
+    (``_publish_swap``): readers never see a half-written file set (they
+    can race the brief window between renames and retry; on object
+    stores, prefer a manifest/catalog pointer flip instead), and a swap
+    interrupted by a crash is recovered before the footprint is measured.
+    Returns the new file count.
     """
-    import os
-    import shutil
-
+    _recover_swap(path)
     total = 0
     for root, _, names in os.walk(path):
         for n in names:
@@ -144,12 +199,8 @@ def compact_parquet(
         ).sortWithinPartitions(*sort_within_by)
     else:
         df = df.repartition(n_files)
-    tmp = path.rstrip("/") + ".__compact_tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + ".__compact_old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    df.write.mode("overwrite").parquet(_swap_paths(path)[0])
+    _publish_swap(path)
     return n_files
 
 
@@ -255,12 +306,11 @@ def overwrite_partitions(
 
 
 def write_snapshot(df: DataFrame, base_dir: str, fmt: str = "parquet") -> int:
-    """Versioned snapshot write (time travel): each call lands a complete
-    immutable copy under ``base_dir/v=N`` and then atomically flips the
-    ``_LATEST`` pointer file — readers either see the previous snapshot
-    or the new one, never a half-written directory (the rename-swap
-    publication discipline the streaming MV sink uses). Returns the new
-    version number.
+    """Versioned snapshot write (time travel): ``stage_snapshot`` lands a
+    complete immutable copy under ``base_dir/v=N``, then
+    ``publish_snapshot`` atomically flips the ``_LATEST`` pointer —
+    readers either see the previous snapshot or the new one, never a
+    half-written directory. Returns the new version number.
 
     This is the poor-man's table format: what Iceberg/Delta do with
     manifests, reduced to "directory per version + one pointer file" —
@@ -271,25 +321,14 @@ def write_snapshot(df: DataFrame, base_dir: str, fmt: str = "parquet") -> int:
     100 TB fact layer (there, overwrite_partitions + partition-level
     manifests play this role).
     """
-    import os
-
-    os.makedirs(base_dir, exist_ok=True)
-    current = read_snapshot_version(base_dir)
-    version = (current if current is not None else -1) + 1
-    vdir = os.path.join(base_dir, f"v={version}")
-    df.write.format(fmt).mode("errorifexists").save(vdir)
-    tmp = os.path.join(base_dir, "_LATEST.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(base_dir, "_LATEST"))
+    version = stage_snapshot(df, base_dir, fmt)
+    publish_snapshot(base_dir, version)
     return version
 
 
 def read_snapshot_version(base_dir: str) -> int | None:
     """Current published version per the ``_LATEST`` pointer (None when
     the table has never been published)."""
-    import os
-
     p = os.path.join(base_dir, "_LATEST")
     if not os.path.exists(p):
         return None
@@ -308,8 +347,6 @@ def read_snapshot(
     it was vacuumed). Resolution is one pointer-file read — no listing
     of the table directory, so resolution cost is independent of
     history length."""
-    import os
-
     if version is None:
         version = read_snapshot_version(base_dir)
         if version is None:
@@ -325,9 +362,6 @@ def vacuum_snapshots(base_dir: str, keep: int = 2) -> list[int]:
     published one). Returns the removed version numbers. Deletion order
     is oldest-first so a crash mid-vacuum leaves a contiguous recent
     history."""
-    import os
-    import shutil
-
     current = read_snapshot_version(base_dir)
     versions = sorted(
         int(d.split("=", 1)[1])
@@ -348,9 +382,6 @@ def stage_snapshot(df: DataFrame, base_dir: str, fmt: str = "parquet") -> int:
     the published snapshot while audits run against the staged one. The
     version is allocated past every existing ``v=`` directory (published
     or staged), so concurrent stages cannot collide with the pointer."""
-    import os
-    import re
-
     os.makedirs(base_dir, exist_ok=True)
     existing = [
         int(m.group(1))
@@ -366,9 +397,7 @@ def stage_snapshot(df: DataFrame, base_dir: str, fmt: str = "parquet") -> int:
 
 def publish_snapshot(base_dir: str, version: int) -> None:
     """PUBLISH leg: atomically flip ``_LATEST`` to a previously staged
-    version (the same rename-swap discipline as write_snapshot)."""
-    import os
-
+    version (write the pointer to a temp file, then ``os.replace``)."""
     if not os.path.isdir(os.path.join(base_dir, f"v={version}")):
         raise FileNotFoundError(
             f"publish_snapshot: staged directory v={version} missing "
@@ -383,9 +412,6 @@ def publish_snapshot(base_dir: str, version: int) -> None:
 def abort_snapshot(base_dir: str, version: int) -> None:
     """Discard a staged version. Refuses to remove the PUBLISHED one —
     an abort must never take the live table away from readers."""
-    import os
-    import shutil
-
     if read_snapshot_version(base_dir) == version:
         raise ValueError(
             f"abort_snapshot: v={version} is published; aborting it would "
@@ -411,8 +437,6 @@ def write_audit_publish(
     callables ``DataFrame -> str | None`` returning a failure message
     or None; all audits run (the report lists every failure, not just
     the first). Returns (version, published, failures)."""
-    import os
-
     version = stage_snapshot(df, base_dir, fmt)
     staged = spark.read.format(fmt).load(
         os.path.join(base_dir, f"v={version}")

@@ -21,6 +21,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.dedup import incremental_append
+from ..sources.warehouse import _publish_swap, _recover_swap, _swap_paths
 
 
 def incremental_sink(
@@ -49,44 +50,13 @@ def _sink_exists(path: str) -> bool:
     )
 
 
-# ------------------------------------------------------------------ swap
-# The atomic-swap + source-file-manifest discipline shared by every
-# foreachBatch sink below (rollup, histogram, corpus build): a batch's
-# effects are made exactly-once PER SOURCE FILE by persisting the set of
-# already-merged files as a `_merged_files` sidecar inside the state
-# directory (parquet readers ignore `_`-prefixed files), and state
-# replacement goes tmp → (live → old) → (tmp → live) → rm old so a crash
-# at any point is recovered by `_recover_swap` before the next read.
-
-
-def _swap_paths(live: str) -> tuple[str, str]:
-    return live.rstrip("/") + ".__state_tmp", live.rstrip("/") + ".__state_old"
-
-
-def _recover_swap(live: str) -> None:
-    import shutil
-
-    tmp, old = _swap_paths(live)
-    if os.path.isdir(old):
-        if os.path.isdir(live):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, live)
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-
-
-def _publish_swap(live: str) -> None:
-    """Promote the fully-written tmp dir to live (tmp must exist)."""
-    import shutil
-
-    tmp, old = _swap_paths(live)
-    if os.path.isdir(live):
-        os.rename(live, old)
-        os.rename(tmp, live)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, live)
+# --------------------------------------------------------- file manifest
+# The exactly-once discipline shared by the foreachBatch state sinks below
+# (rollup, histogram, corpus-build census): a batch's effects are applied
+# once PER SOURCE FILE by persisting the set of already-merged files as a
+# `_merged_files` sidecar inside the state directory (parquet readers
+# ignore `_`-prefixed files), and the state plus its manifest are replaced
+# together through sources/warehouse's crash-safe directory swap.
 
 
 def _read_manifest(state_dir: str) -> set[str]:
@@ -131,6 +101,39 @@ def _batch_files(batch: DataFrame) -> list[str]:
             if r.f
         }
     )
+
+
+def _merge_new_files(
+    batch: DataFrame,
+    schema,
+    state_dir: str,
+    step: Callable[[DataFrame, DataFrame | None, list[str]], DataFrame],
+) -> None:
+    """One micro-batch of a manifest-tracked state sink: recover an
+    interrupted swap, keep only the batch's not-yet-merged source files,
+    and let ``step(source_rows, stored_state_or_None, new_files)`` build
+    the next state, which is written with the grown manifest and swapped
+    in. A batch that mixes merged and unmerged files (fresh checkpoint,
+    wider trigger) re-reads just the unmerged files, so already-merged
+    content never double-counts."""
+    _recover_swap(state_dir)
+    # micro-batch DataFrames report no inputFiles(); input_file_name()
+    # still resolves for the file source
+    files = _batch_files(batch)
+    if not files:
+        return  # empty micro-batch: nothing to merge, keep the swap out
+    done = _read_manifest(state_dir)
+    new = [f for f in files if f not in done]
+    if not new:
+        return  # at-least-once replay: every source file already merged
+    s = batch.sparkSession
+    src = batch if len(new) == len(files) else s.read.schema(schema).parquet(*new)
+    stored = s.read.parquet(state_dir) if os.path.isdir(state_dir) else None
+    tmp = _swap_paths(state_dir)[0]
+    step(src, stored, new).write.mode("overwrite").parquet(tmp)
+    with open(os.path.join(tmp, "_merged_files"), "w") as fh:
+        fh.write("\n".join(sorted(done.union(new))) + "\n")
+    _publish_swap(state_dir)
 
 
 def run_available_now(
@@ -236,18 +239,15 @@ def run_foreach_batch_rollup(
     unmerged files (fresh checkpoint with a wider trigger) re-reads
     just the unmerged files. The manifest grows one line per source
     file — the same order of metadata a transaction log keeps; compact
-    the source to compact it. The swap
-    itself rewrites to a temp sibling then renames (the compact_parquet
-    pattern); a crash mid-swap is recovered on the next batch before
-    anything is read: a dangling ``.__rollup_old`` with no live rollup
-    is renamed back (so history is never silently reset to one batch),
-    and stale ``.__rollup_tmp``/``.__rollup_old`` leftovers are purged.
+    the source to compact it. The rollup is replaced through
+    sources/warehouse's directory swap, and a crash mid-swap is
+    recovered on the next batch before anything is read: a dangling
+    ``.__rollup_old`` with no live rollup is renamed back (so history is
+    never silently reset to one batch), and stale
+    ``.__rollup_tmp``/``.__rollup_old`` leftovers are purged.
     ``measures`` must still be the decomposable set partial_rollup
     enforces AND the source append-only (merge_rollup caveats unchanged).
     """
-    import os
-    import shutil
-
     from ..operators.incremental_agg import merge_rollup, partial_rollup
 
     # The atomic swap (os.rename), the _merged_files manifest (open/read),
@@ -268,57 +268,17 @@ def run_foreach_batch_rollup(
         reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
     src = reader.parquet(source_path)
 
-    tmp = rollup_path.rstrip("/") + ".__rollup_tmp"
-    old = rollup_path.rstrip("/") + ".__rollup_old"
-
-    def recover() -> None:
-        # crash between the two swap renames leaves old but no live dir:
-        # restore it; any other leftover is stale and safe to purge
-        if os.path.isdir(old):
-            if os.path.isdir(rollup_path):
-                shutil.rmtree(old)
-            else:
-                os.rename(old, rollup_path)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-
-    def merge(batch: DataFrame, _epoch: int) -> None:
-        recover()
-        # micro-batch DataFrames report no inputFiles(); input_file_name()
-        # still resolves for the file source — a metadata-sized collect
-        # bounded by files-per-batch, the same scale as a txn-log entry
-        files = _batch_files(batch)
-        if not files:
-            return  # empty micro-batch: nothing to merge, keep the swap out
-        done = _read_manifest(rollup_path) if os.path.isdir(rollup_path) else set()
-        new = [f for f in files if f not in done]
-        if not new:
-            return  # at-least-once replay: every source file already merged
-        s = batch.sparkSession
-        # a mixed batch (fresh checkpoint, wider trigger) re-reads just the
-        # unmerged files so already-merged content never double-counts
-        src_df = batch if len(new) == len(files) else s.read.schema(
-            schema
-        ).parquet(*new)
+    def step(src_df: DataFrame, stored, _new) -> DataFrame:
         if transform is not None:
             # per-batch derivation (e.g. histogram bucketing) applied on
             # BOTH ingest paths so a mixed-batch re-read rolls up the
             # same shape; must be row-local (no cross-batch state)
             src_df = transform(src_df)
         delta = partial_rollup(src_df, keys, measures)
-        stored = (
-            s.read.parquet(rollup_path) if os.path.isdir(rollup_path) else None
-        )
-        merged = merge_rollup(stored, delta, keys, measures)
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_merged_files"), "w") as fh:
-            fh.write("\n".join(sorted(done.union(new))) + "\n")
-        if os.path.isdir(rollup_path):
-            os.rename(rollup_path, old)
-            os.rename(tmp, rollup_path)
-            shutil.rmtree(old)
-        else:
-            os.rename(tmp, rollup_path)
+        return merge_rollup(stored, delta, keys, measures)
+
+    def merge(batch: DataFrame, _epoch: int) -> None:
+        _merge_new_files(batch, schema, rollup_path, step)
 
     q = (
         src.writeStream.foreachBatch(merge)
@@ -412,7 +372,7 @@ def run_foreach_batch_corpus_build(
         append_ann_index staged-rename so a replayed batch can never
         land rows twice;
       - ``census/`` — the cumulative (source, disposition, n) table,
-        replaced per batch via the rollup sinks' atomic swap, with the
+        replaced per batch through the same swap as the rollup, with the
         ``_merged_files`` manifest making census effects exactly-once
         per SOURCE FILE across checkpoint relocations and replays.
 
@@ -468,20 +428,8 @@ def run_foreach_batch_corpus_build(
         reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
     src = reader.parquet(source_path)
 
-    def build(batch: DataFrame, _epoch: int) -> None:
-        _recover_swap(census_dir)
-        files = _batch_files(batch)
-        if not files:
-            return
-        done = _read_manifest(census_dir) if os.path.isdir(census_dir) else set()
-        new = [f for f in files if f not in done]
-        if not new:
-            return  # at-least-once replay: every source file already built
-        s = batch.sparkSession
-        src_df = batch if len(new) == len(files) else s.read.schema(
-            schema
-        ).parquet(*new)
-
+    def step(src_df: DataFrame, stored, new: list[str]) -> DataFrame:
+        s = src_df.sparkSession
         # --- the cb1 gate ladder, expression-only, text dropped here ---
         trimmed = F.regexp_replace(
             F.coalesce(F.col(text_col), F.lit("")), r"^\s+|\s+$", ""
@@ -581,25 +529,20 @@ def run_foreach_batch_corpus_build(
                 ) as fh:
                     json.dump(report, fh, sort_keys=True)
 
-        # --- census merge second (atomic swap + manifest) ---
+        # --- census merge second (committed with the manifest) ---
         delta = staged.groupBy("source", "disposition").agg(
             F.count(F.lit(1)).cast("bigint").alias("n")
         )
-        stored = (
-            s.read.parquet(census_dir) if os.path.isdir(census_dir) else None
-        )
-        merged = (
-            delta
-            if stored is None
-            else stored.unionByName(delta)
+        if stored is None:
+            return delta
+        return (
+            stored.unionByName(delta)
             .groupBy("source", "disposition")
             .agg(F.sum("n").cast("bigint").alias("n"))
         )
-        tmp, _old = _swap_paths(census_dir)
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_merged_files"), "w") as fh:
-            fh.write("\n".join(sorted(done.union(new))) + "\n")
-        _publish_swap(census_dir)
+
+    def build(batch: DataFrame, _epoch: int) -> None:
+        _merge_new_files(batch, schema, census_dir, step)
 
     q = (
         src.writeStream.foreachBatch(build)

@@ -10,12 +10,6 @@ from pyspark.sql import functions as F
 
 from neotree_data_pipeline_kedro_spark.plans.pipeline import Engine, EngineConfig
 
-import pytest
-
-# r13 (VERDICT r12 #2): heavyweight integration tail — excluded from the
-# default driver-window run; executed by the builder via `-m slow`.
-pytestmark = pytest.mark.slow
-
 
 ADM_SCRIPT = "-ZO1TK4zMvLhxTw6eKia"
 DIS_SCRIPT = "-ZO2DISxMvLhxTw6eKia"
