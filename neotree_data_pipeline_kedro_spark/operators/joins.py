@@ -13,18 +13,17 @@ custom pieces the reference needs are:
 - ``tiered_asof_assignment`` (J3): the reference's greedy, order-dependent
   1:1 admission<->discharge assignment (merge_all.py:143-511). The greedy
   scan is inherently sequential *within* a (uid, facility) group but groups
-  are tiny (a patient's episodes), so it runs as applyInPandas — full
-  cross-group parallelism, deterministic within-group order.
+  are tiny (a patient's episodes), so it runs as one ``aggregate``
+  higher-order function per group — full cross-group parallelism,
+  deterministic within-group order, no Python worker.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def anti_join(left: DataFrame, right: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -246,140 +245,56 @@ def asof_join(
 # J3: the ALL-table greedy tiered assignment (merge_all.py:143-511)
 # ---------------------------------------------------------------------------
 
-_MATCH_STATUS = {
-    "matched": "matched",
-    "ambiguous": "ambiguous",
-    "unmatched": "unmatched_discharge",
-}
-
-
-def _greedy_partition(batches) -> pd.DataFrame:
-    """Greedy matching over a whole key-partition in ONE linear scan.
-
-    Reference order (merge_all.py:343-470): per (uid, facility), discharges
-    in discharge-datetime order consume admissions; tiers: unique OFC
-    equality -> unique BirthWeight equality -> datetime fallback. The
-    fallback ALWAYS assigns when any admission is free: nearest
-    non-negative (discharge_dt - admission_dt) when both datetimes exist,
-    else the earliest-admitted candidate (merge_all.py:345-365
-    fallback_by_datetime), and every fallback match is flagged
-    ``ambiguous`` (merge_all.py:430-432); ``matched`` means a unique
-    OFC/BW hit. The reference lets frame order break ties; rid is the
-    documented deterministic tiebreak here.
-
-    Shape note: groupBy().applyInPandas pays per-GROUP python/pandas
-    overhead, which dominates when groups are tiny (a patient's episodes);
-    this runs per PARTITION (repartition by key upstream), sorts once, and
-    walks plain python lists — measured ~10x on the sf0.1 assignment query.
-    """
-    pdf = pd.concat(list(batches), ignore_index=True)
-    if not len(pdf):
-        return
-    # normalize DateType/None to datetime64+NaT so the int64 view below holds
-    pdf["__ts"] = pd.to_datetime(pdf["__ts"], errors="coerce")
-    pdf = pdf.sort_values(["uid", "facility", "__ts", "__rid"], kind="mergesort")
-    uid_a = pdf["uid"].tolist()
-    fac_a = pdf["facility"].tolist()
-    side_a = pdf["__side"].tolist()
-    rid_a = pdf["__rid"].tolist()
-    ofc_a = pdf["ofc"].tolist()
-    bw_a = pdf["bw"].tolist()
-    # int64 epoch view: NaT becomes INT64_MIN (sentinel), comparisons stay
-    # exact and ~10x cheaper than Timestamp arithmetic
-    nat = -(1 << 63)
-    ts_a = pdf["__ts"].to_numpy().view("i8").tolist()
-
-    o_rid, o_adm, o_status, o_uid, o_fac = [], [], [], [], []
-    n = len(rid_a)
-    i = 0
-    while i < n:
-        j = i
-        while j < n and uid_a[j] == uid_a[i] and fac_a[j] == fac_a[i]:
-            j += 1
-        # group [i, j): rows already in (__ts NaT-last, __rid) order
-        free: dict = {}  # rid -> row index
-        for k in range(i, j):
-            if side_a[k] == "a":
-                free[rid_a[k]] = k
-        for k in range(i, j):
-            if side_a[k] != "d":
-                continue
-            d_ofc, d_bw, d_ts = ofc_a[k], bw_a[k], ts_a[k]
-            status, pick = "unmatched_discharge", None
-            if free:
-                ofc_eq = (
-                    [r for r, m in free.items() if ofc_a[m] == d_ofc]
-                    if d_ofc == d_ofc  # not-NaN
-                    else []
-                )
-                if len(ofc_eq) == 1:
-                    pick, status = ofc_eq[0], "matched"
-                else:
-                    bw_eq = (
-                        [r for r, m in free.items() if bw_a[m] == d_bw]
-                        if d_bw == d_bw
-                        else []
-                    )
-                    if len(bw_eq) == 1:
-                        pick = bw_eq[0]
-                        # a unique BW hit after an ambiguous OFC tier keeps
-                        # the ambiguous flag (merge_all.py:406-418)
-                        status = "ambiguous" if len(ofc_eq) > 1 else "matched"
-                    else:
-                        # datetime fallback: always assigns, always ambiguous
-                        best = None
-                        if d_ts != nat:
-                            for r, m in free.items():
-                                a_ts = ts_a[m]
-                                if a_ts == nat:
-                                    continue
-                                delta = d_ts - a_ts
-                                if delta >= 0 and (
-                                    best is None
-                                    or delta < best[0]
-                                    or (delta == best[0] and r < best[1])
-                                ):
-                                    best = (delta, r)
-                        if best is not None:
-                            pick = best[1]
-                        else:
-                            # no usable delta: earliest-admitted candidate
-                            # (NaT-admission last), rid tiebreak
-                            pick = min(
-                                free,
-                                key=lambda r: (0, ts_a[free[r]], r)
-                                if ts_a[free[r]] != nat
-                                else (1, 0, r),
-                            )
-                        status = "ambiguous"
-            if pick is not None:
-                free.pop(pick)
-            o_rid.append(rid_a[k])
-            o_adm.append(pick)
-            o_status.append(status)
-            o_uid.append(uid_a[k])
-            o_fac.append(fac_a[k])
-        i = j
-    yield pd.DataFrame(
-        {
-            "discharge_rid": pd.array(o_rid, dtype="Int64"),
-            "admission_rid": pd.array(o_adm, dtype="Int64"),
-            "match_status": o_status,
-            "uid": o_uid,
-            "facility": o_fac,
-        }
-    )
-
-
-_ASSIGN_SCHEMA = T.StructType(
-    [
-        T.StructField("discharge_rid", T.LongType()),
-        T.StructField("admission_rid", T.LongType()),
-        T.StructField("match_status", T.StringType()),
-        T.StructField("uid", T.StringType()),
-        T.StructField("facility", T.StringType()),
-    ]
-)
+# One discharge ``d`` of the greedy scan (merge_all.py:343-470) over
+# ``acc = struct(free, out)``: pick a free admission by the tiers, drop it
+# from ``free`` and append the discharge's row to ``out``.
+#
+# Tiers: unique OFC equality -> unique BirthWeight equality -> datetime
+# fallback. The fallback ALWAYS assigns when any admission is free: the
+# nearest non-negative (discharge_dt - admission_dt), i.e. the latest
+# admission at or before the discharge (``near``: max of (ts, ~rid), so the
+# lower rid wins among equal datetimes), else the earliest-admitted
+# candidate (merge_all.py:345-365 fallback_by_datetime) — the head of
+# ``free``, which is sorted by (ts is null, ts, rid). Every fallback match
+# is ``ambiguous`` (merge_all.py:430-432), and a unique BW hit after an
+# ambiguous OFC tier keeps the ambiguous flag (merge_all.py:406-418). The
+# reference lets frame order break ties; the lower rid is the
+# deterministic tiebreak here.
+#
+# Lambdas are interpreted with no common-subexpression elimination, so the
+# tier arrays (``t``) and the pick (``p``) are each bound once through a
+# one-element ``transform``. Built as SQL text: one parse instead of a few
+# hundred py4j Column calls.
+_GREEDY_SCAN = """
+aggregate(
+  __dis,
+  named_struct('free', __free, 'out', CAST(array() AS
+    array<struct<discharge_rid:bigint,admission_rid:bigint,match_status:string>>)),
+  (acc, d) -> transform(
+    array(transform(
+      array(named_struct(
+        'ofc', filter(acc.free, a -> a.ofc = d.ofc),
+        'bw', filter(acc.free, a -> a.bw = d.bw),
+        'near', array_max(transform(
+          filter(acc.free, a -> a.ts <= d.ts),
+          a -> named_struct('ts', a.ts, 'nrid', ~a.rid))))),
+      t -> CASE
+        WHEN size(acc.free) = 0 THEN
+          named_struct('rid', CAST(NULL AS BIGINT), 'status', 'unmatched_discharge')
+        WHEN size(t.ofc) = 1 THEN
+          named_struct('rid', t.ofc[0].rid, 'status', 'matched')
+        WHEN size(t.bw) = 1 THEN
+          named_struct('rid', t.bw[0].rid,
+                       'status', IF(size(t.ofc) > 1, 'ambiguous', 'matched'))
+        ELSE named_struct('rid', coalesce(~t.near.nrid, acc.free[0].rid),
+                          'status', 'ambiguous')
+      END)[0]),
+    p -> named_struct(
+      'free', filter(acc.free, a -> NOT a.rid <=> p.rid),
+      'out', concat(acc.out, array(named_struct(
+        'discharge_rid', d.rid, 'admission_rid', p.rid, 'match_status', p.status)))))[0]
+).out
+"""
 
 
 def tiered_asof_assignment(
@@ -398,35 +313,54 @@ def tiered_asof_assignment(
     (discharge_rid, admission_rid|NULL, match_status, uid, facility).
 
     Deterministic: discharges processed in (discharge-datetime, rid) order
-    within each (uid, facility) group (the reference sorts at
-    merge_all.py:287 then iterates). The greedy scan is the only operator
-    family in this engine where per-group imperative logic is genuinely
-    required (SURVEY §7 hard part #1); it runs partition-parallel —
-    repartition on the group key, one mapInPandas scan per partition —
-    because per-group applyInPandas overhead dominates with tiny groups.
+    within each (uid, facility) group, null datetimes last (the reference
+    sorts at merge_all.py:287 then iterates). The scan is sequential
+    within a group but groups are tiny (a patient's episodes), so it runs
+    as one Catalyst plan: a single ``groupBy(uid, facility)`` collects the
+    group's admissions and sorted discharges, one ``aggregate``
+    higher-order function walks the discharges (``_GREEDY_SCAN``), and
+    ``explode`` emits one row per discharge. No Python worker is involved.
+
+    OFC/BW NaN is mapped to null: the reference never matches NaN, while
+    Spark's ``NaN = NaN`` is true.
     """
-    a = admissions.select(
-        F.col(uid_col).alias("uid"),
-        F.col(facility_col).alias("facility"),
-        F.col(adm_id).cast("long").alias("__rid"),
-        F.col(adm_ts).alias("__ts"),
-        F.col(ofc_col).cast("double").alias("ofc"),
-        F.col(bw_col).cast("double").alias("bw"),
-        F.lit("a").alias("__side"),
-    )
-    d = discharges.select(
-        F.col(uid_col).alias("uid"),
-        F.col(facility_col).alias("facility"),
-        F.col(dis_id).cast("long").alias("__rid"),
-        F.col(dis_ts).alias("__ts"),
-        F.col(ofc_col).cast("double").alias("ofc"),
-        F.col(bw_col).cast("double").alias("bw"),
-        F.lit("d").alias("__side"),
-    )
+
+    def side(df: DataFrame, rid: str, ts: str, is_adm: bool) -> DataFrame:
+        return df.select(
+            F.col(uid_col).alias("uid"),
+            F.col(facility_col).alias("facility"),
+            F.lit(is_adm).alias("__adm"),
+            # (ts_null, ts, rid) lead the struct, so array_sort is that order
+            F.struct(
+                F.col(ts).isNull().alias("ts_null"),
+                F.col(ts).alias("ts"),
+                F.col(rid).cast("long").alias("rid"),
+                *[
+                    F.nanvl(F.col(c).cast("double"), F.lit(None)).alias(name)
+                    for c, name in ((ofc_col, "ofc"), (bw_col, "bw"))
+                ],
+            ).alias("__e"),
+        )
+
+    # explode the scan expression itself, not a projected column: an
+    # attribute input would let Catalyst infer a size() > 0 filter and
+    # evaluate the scan twice
     return (
-        a.unionByName(d)
-        .repartition("uid", "facility")
-        .mapInPandas(_greedy_partition, schema=_ASSIGN_SCHEMA)
+        side(admissions, adm_id, adm_ts, True)
+        .unionByName(side(discharges, dis_id, dis_ts, False))
+        .groupBy("uid", "facility")
+        .agg(
+            F.expr("array_sort(collect_list(IF(__adm, __e, NULL))) AS __free"),
+            F.expr("array_sort(collect_list(IF(__adm, NULL, __e))) AS __dis"),
+        )
+        .selectExpr("uid", "facility", f"explode({_GREEDY_SCAN}) AS __r")
+        .selectExpr(
+            "__r.discharge_rid",
+            "__r.admission_rid",
+            "__r.match_status",
+            "uid",
+            "facility",
+        )
     )
 
 

@@ -434,6 +434,8 @@ class Engine:
         adm_cols = [c for c in adm.columns if c not in ("uid", "facility")]
         dis_cols = [c for c in dis.columns if c not in ("uid", "facility")]
         a_pay = adm.select(
+            F.col("uid").alias("__a_uid"),
+            F.col("facility").alias("__a_facility"),
             F.col("id").alias("__arid"),
             *[F.col(f"`{c}`").alias(f"__a_{c}") for c in adm_cols],
         )
@@ -441,38 +443,36 @@ class Engine:
             F.col("id").alias("__drid"),
             *[F.col(f"`{c}`").alias(f"__d_{c}") for c in dis_cols],
         )
+        # one read of the assignment: every discharge carries its pick (or
+        # none), the full outer join adds the admissions no discharge took
+        rows = asg.join(
+            a_pay, F.col("admission_rid") == F.col("__arid"), "full_outer"
+        ).join(d_pay, F.col("discharge_rid") == F.col("__drid"), "left")
+        has_adm = F.col("__arid").isNotNull()
+        has_dis = F.col("__drid").isNotNull()
 
-        hit = asg.filter(F.col("admission_rid").isNotNull())
-        merged = (
-            hit.join(a_pay, F.col("admission_rid") == F.col("__arid"))
-            .join(d_pay, F.col("discharge_rid") == F.col("__drid"))
-            .select(
-                "uid",
-                "facility",
-                "match_status",
-                *[
-                    F.col(f"`__d_{c}`" if c in dis_cols else f"`__a_{c}`").alias(c)
-                    for c in dict.fromkeys(adm_cols + dis_cols)
-                ],
+        def merged(c: str) -> Column:
+            # a matched discharge overwrites the admission column of the
+            # same name, nulls included (merge_all.py:452 {**adm, **dis})
+            if c not in dis_cols:
+                return F.col(f"`__a_{c}`")
+            if c not in adm_cols:
+                return F.col(f"`__d_{c}`")
+            return F.when(has_dis, F.col(f"`__d_{c}`")).otherwise(
+                F.col(f"`__a_{c}`")
             )
+
+        return rows.select(
+            F.coalesce("uid", "__a_uid").alias("uid"),
+            F.coalesce("facility", "__a_facility").alias("facility"),
+            F.coalesce("match_status", F.lit("unmatched_admission")).alias(
+                "match_status"
+            ),
+            *[merged(c).alias(c) for c in dict.fromkeys(adm_cols + dis_cols)],
+            has_adm.alias("has_admission"),
+            has_dis.alias("has_discharge"),
+            (has_adm & has_dis).alias("is_closed"),
         )
-        adm_only = adm.join(
-            hit.select(F.col("admission_rid").alias("__arid")),
-            F.col("id") == F.col("__arid"),
-            "left_anti",
-        )
-        dis_only = (
-            asg.filter(F.col("admission_rid").isNull())
-            .select("uid", "facility", "match_status", "discharge_rid")
-            .join(d_pay, F.col("discharge_rid") == F.col("__drid"))
-            .select(
-                "uid",
-                "facility",
-                "match_status",
-                *[F.col(f"`__d_{c}`").alias(c) for c in dis_cols],
-            )
-        )
-        return lifecycle_union(merged, adm_only, dis_only)
 
     # -- incremental reconcile (J7; sql_functions.py:1960-2160) ------------
     def reconcile(
@@ -511,12 +511,14 @@ class Engine:
         adm_name = names[0]
         dis_name = names[1] if len(names) > 1 else None
 
+        # later stages read what _out returned (the warehouse read-back when
+        # materialized), so no stage re-derives its inputs from a lazy plan
         out["admissions_fixed"] = self._out(
-            "admissions_fixed", self.fix_records(tidy[adm_name], adm_name)
+            "admissions_fixed", self.fix_records(out[adm_name], adm_name)
         )
         if dis_name:
             out["discharges_fixed"] = self._out(
-                "discharges_fixed", self.fix_records(tidy[dis_name], dis_name)
+                "discharges_fixed", self.fix_records(out[dis_name], dis_name)
             )
         out["summary_admissions"] = self._out(
             "summary_admissions", self.summary_tables(out["admissions_fixed"])
@@ -527,9 +529,11 @@ class Engine:
             else out["admissions_fixed"]
         )
         out["joined"] = self._out("joined", joined)
-        out["union_view"] = self._out("union_view", self.union_views(joined))
+        out["union_view"] = self._out(
+            "union_view", self.union_views(out["joined"])
+        )
         out["convenience"] = self._out(
-            "convenience", self.convenience_views(joined)
+            "convenience", self.convenience_views(out["joined"])
         )
         out["summary_counts"] = self._out(
             "summary_counts", self.summary_counts(out["convenience"])

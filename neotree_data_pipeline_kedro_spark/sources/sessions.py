@@ -342,15 +342,18 @@ def entry_rows(
         )
     )
 
-    # last-wins per key; completed_at first-wins
+    # last-wins per key; completed_at first-wins. The window partitions by
+    # the session only and keeps the first row of each key run, so its
+    # exchange is the one a per-session groupBy downstream (Engine.tidy's
+    # pivot) needs; keys are never null (both formats filter them out).
     order = F.when(F.col("key") == "completed_at", F.col("__pos")).otherwise(
         -F.col("__pos")
     )
-    w = Window.partitionBy(*id_cols, "key").orderBy(order)
+    w = Window.partitionBy(*id_cols).orderBy("key", order)
     rows = (
-        rows.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__pos")
+        rows.withColumn("__prev", F.lag("key").over(w))
+        .filter(~F.col("__prev").eqNullSafe(F.col("key")))
+        .drop("__prev", "__pos")
     )
 
     is_mcl = (

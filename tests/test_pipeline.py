@@ -5,7 +5,9 @@ merge, mirroring the reference DAG (pipeline.py:21-40)."""
 from __future__ import annotations
 
 import json
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from neotree_data_pipeline_kedro_spark.plans.pipeline import Engine, EngineConfig
@@ -322,6 +324,46 @@ def test_engine_files_to_warehouse_integration(tmp_path, spark):
     assert not allt["B111-0001"]["has_discharge"]
     assert not allt["B111-0001"]["is_closed"]
     assert allt["B111-0001"]["match_status"] == "unmatched_admission"
+
+
+@pytest.fixture(scope="module")
+def stage_plans(spark, tmp_path_factory):
+    """Physical plan of every stage Engine.run hands to a parquet
+    materialize hook that reads each written stage back."""
+    warehouse = tmp_path_factory.mktemp("warehouse")
+    plans = {}
+
+    def materialize(name, df):
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        df.write.mode("overwrite").parquet(str(warehouse / name))
+        return spark.read.parquet(str(warehouse / name))
+
+    eng = _engine()
+    eng._mat = materialize
+    eng.run(_sessions(spark))
+    return plans
+
+
+def test_engine_stages_read_materialized_inputs(stage_plans):
+    """A stage after a materialized one reads the written table instead of
+    re-deriving it: the fixes never re-parse the session JSON, the views
+    never re-run join_tables' join."""
+    json_parse = re.compile(r"from_json|get_json_object|json_tuple")
+    for name in ("admissions_fixed", "discharges_fixed"):
+        assert not json_parse.search(stage_plans[name]), name
+    for name in ("union_view", "convenience"):
+        assert not re.search(r"\w*Join\b", stage_plans[name]), name
+
+
+def test_engine_stages_run_no_python(stage_plans):
+    """The product path stays in the JVM: no stage plan has a Python
+    worker node (the assignment is an aggregate lambda, not mapInPandas)."""
+    python_node = re.compile(
+        r"\b\w*(?:InPandas|EvalPython|InArrow)\b"
+    )
+    assert "merged_all" in stage_plans
+    for name, plan in stage_plans.items():
+        assert not python_node.search(plan), name
 
 
 def test_engine_reconcile_completes_open_rows(spark):

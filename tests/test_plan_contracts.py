@@ -995,3 +995,30 @@ def test_mixture_plan_is_broadcast_algebra(spark):
     assert "ExistingRDD" in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_tiered_assignment_runs_in_jvm(spark):
+    # the greedy scan is one aggregate lambda per (uid, facility) group
+    # after a single shuffle: no Python worker node, no join
+    plan = plan_of(spark, "j3_tiered_greedy_assignment")
+    assert not re.search(r"\b\w*(?:InPandas|EvalPython|InArrow)\b", plan)
+    assert "Join" not in plan
+    assert exchanges(plan) == 1
+
+
+def test_tidy_pivot_reuses_the_entry_window_shuffle(spark):
+    # entry_rows' last-wins window partitions by the session columns only,
+    # which is exactly the pivot's grouping: the pivot adds no Exchange on
+    # top of dedup's and the window's
+    from test_pipeline import _engine, _sessions
+
+    eng = _engine()
+    deduped = eng.deduplicate(eng.import_raw(_sessions(spark)))
+
+    def n_exchanges(df) -> int:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return len(re.findall(r"\bExchange\b", plan))
+
+    wide = eng.tidy(deduped)
+    for name in ("admissions", "discharges"):
+        assert n_exchanges(wide[name]) == n_exchanges(deduped) + 1, name
