@@ -13,12 +13,14 @@ data_engineering/pipeline.py:21-40, node wiring nodes.py:21-97):
 
 Where the reference passes status dicts between OS processes and keeps all
 state in Postgres, here every stage is a pure ``DataFrame -> DataFrame``
-function and ``Engine.run`` composes one lazy plan per output; Spark's own
-scheduler distributes the work, so the Kedro ParallelRunner machinery has
-no twin. Stage boundaries survive as the keys of the returned dict (and
-the optional per-stage ``materialize`` hook) so each intermediate remains
-independently inspectable, preserving the reference's derived-schema
-contract.
+function. With ``--parallel`` the reference runs its DAG under Kedro's
+ParallelRunner (cli.py:147,193); the twin is ``Engine.run``, which starts
+each stage on its own thread as soon as the stages it reads are
+materialized, so independent stages' Spark jobs share the cores under
+Spark's FIFO scheduler. Stage boundaries survive as the keys of the
+returned dict (and the optional per-stage ``materialize`` hook) so each
+intermediate remains independently inspectable, preserving the reference's
+derived-schema contract.
 
 Per-stage semantics live in the operator modules (cited there); this file
 only wires them.
@@ -27,11 +29,15 @@ only wires them.
 from __future__ import annotations
 
 import logging
+import queue
+import threading
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark import InheritableThread
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.buckets import bw_group, gest_group, temp_group
@@ -51,6 +57,9 @@ from ..operators.uids import repair_duplicate_uids
 from ..sources.sessions import entry_rows, explode_mcl, repair_uid
 
 log = logging.getLogger(__name__)
+
+# an Engine.run stage: (the stages it reads, its build)
+_Stage = tuple[tuple[str, ...], Callable[[], DataFrame]]
 
 # old->new field-key renames (tidy_...mcl_tables.py:414-422,510-518)
 KEY_RENAMES = {
@@ -150,9 +159,23 @@ def _lit_map(d: dict[str, str]):
 class Engine:
     """``Engine(config).run(spark_sessions_df)`` -> dict of stage outputs.
 
-    ``materialize`` (optional): called as ``materialize(name, df)`` after
-    each stage — the warehouse-write hook (parquet/Delta path or temp view);
-    by default stages stay lazy.
+    ``materialize`` (optional): called as ``materialize(name, df)`` once per
+    stage — the warehouse-write hook (parquet/Delta path or temp view); its
+    return value (``df`` when it returns None) is what later stages read.
+    By default stages stay lazy.
+
+    ``run`` builds each stage on its own thread, started as soon as every
+    stage it reads has returned from ``materialize``: ``bronze`` ->
+    ``deduplicated`` -> each script's tidy table and its ``_mcl`` table ->
+    ``<script>_fixed``; ``admissions_fixed`` -> ``summary_admissions``;
+    both fixed tables -> ``joined`` and ``merged_all``; ``joined`` ->
+    ``union_view`` and ``convenience`` -> ``summary_counts`` and
+    ``clean_admissions``. A stage's Spark jobs carry the job description
+    ``engine.<stage>`` and the caller's job group. ``materialize`` may
+    therefore be called concurrently from stage threads and must be
+    thread-safe. ``run`` returns after every stage's hook has returned;
+    when a stage raises, no stage that reads it starts, and ``run`` raises
+    that error once the running stages have finished.
     """
 
     def __init__(
@@ -499,53 +522,109 @@ class Engine:
 
     # -- composition -------------------------------------------------------
     def run(self, sessions: DataFrame) -> dict[str, DataFrame]:
-        cfg = self.config
-        out: dict[str, DataFrame] = {}
-        out["bronze"] = self._out("bronze", self.import_raw(sessions))
-        out["deduplicated"] = self._out("deduplicated", self.deduplicate(out["bronze"]))
-        tidy = self.tidy(out["deduplicated"])
-        for name, df in tidy.items():
-            out[name] = self._out(name, df)
-
-        names = list(cfg.scripts.values())
+        """Build every stage and hand it to ``materialize``, independent
+        stages concurrently (see the class docstring)."""
+        names = list(self.config.scripts.values())
         adm_name = names[0]
         dis_name = names[1] if len(names) > 1 else None
+        out: dict[str, DataFrame] = {}
+        tidy: dict[str, DataFrame] = {}
+        tidy_lock = threading.Lock()
 
-        # later stages read what _out returned (the warehouse read-back when
-        # materialized), so no stage re-derives its inputs from a lazy plan
-        out["admissions_fixed"] = self._out(
-            "admissions_fixed", self.fix_records(out[adm_name], adm_name)
+        def tidied(name: str) -> DataFrame:
+            # every tidy output is its own stage; they share one build
+            with tidy_lock:
+                if not tidy:
+                    tidy.update(self.tidy(out["deduplicated"]))
+            return tidy[name]
+
+        # stage -> (the stages it reads, its build). A build reads what
+        # _out returned for its inputs (the warehouse read-back when
+        # materialized), so no stage re-derives its inputs from a lazy plan.
+        fixed = ("admissions_fixed",) + (("discharges_fixed",) if dis_name else ())
+        stages: dict[str, _Stage] = {
+            "bronze": ((), lambda: self.import_raw(sessions)),
+            "deduplicated": (("bronze",), lambda: self.deduplicate(out["bronze"])),
+        }
+        for name in names:
+            for t in (name, f"{name}_mcl"):
+                stages[t] = (("deduplicated",), partial(tidied, t))
+        stages["admissions_fixed"] = (
+            (adm_name,), lambda: self.fix_records(out[adm_name], adm_name)
         )
         if dis_name:
-            out["discharges_fixed"] = self._out(
-                "discharges_fixed", self.fix_records(out[dis_name], dis_name)
+            stages["discharges_fixed"] = (
+                (dis_name,), lambda: self.fix_records(out[dis_name], dis_name)
             )
-        out["summary_admissions"] = self._out(
-            "summary_admissions", self.summary_tables(out["admissions_fixed"])
+        stages["summary_admissions"] = (
+            ("admissions_fixed",),
+            lambda: self.summary_tables(out["admissions_fixed"]),
         )
-        joined = (
-            self.join_tables(out["admissions_fixed"], out["discharges_fixed"])
+        stages["joined"] = (
+            fixed,
+            lambda: self.join_tables(out["admissions_fixed"], out["discharges_fixed"])
             if dis_name
-            else out["admissions_fixed"]
+            else out["admissions_fixed"],
         )
-        out["joined"] = self._out("joined", joined)
-        out["union_view"] = self._out(
-            "union_view", self.union_views(out["joined"])
+        stages["union_view"] = (("joined",), lambda: self.union_views(out["joined"]))
+        stages["convenience"] = (
+            ("joined",), lambda: self.convenience_views(out["joined"])
         )
-        out["convenience"] = self._out(
-            "convenience", self.convenience_views(out["joined"])
+        stages["summary_counts"] = (
+            ("convenience",), lambda: self.summary_counts(out["convenience"])
         )
-        out["summary_counts"] = self._out(
-            "summary_counts", self.summary_counts(out["convenience"])
-        )
-        self.grant_privileges()
-        out["clean_admissions"] = self._out(
-            "clean_admissions",
-            self.clean_for_research(out["convenience"], adm_name),
+        stages["clean_admissions"] = (
+            ("convenience",),
+            lambda: self.clean_for_research(out["convenience"], adm_name),
         )
         if dis_name:
-            out["merged_all"] = self._out(
-                "merged_all",
-                self.merge_all(out["admissions_fixed"], out["discharges_fixed"]),
+            stages["merged_all"] = (
+                fixed,
+                lambda: self.merge_all(out["admissions_fixed"], out["discharges_fixed"]),
             )
-        return out
+        self._run_stages(sessions.sparkSession, stages, out)
+        self.grant_privileges()
+        return {name: out[name] for name in stages}
+
+    def _run_stages(
+        self,
+        spark: SparkSession,
+        stages: dict[str, _Stage],
+        out: dict[str, DataFrame],
+    ) -> None:
+        """Start each stage on its own thread once every stage it reads is
+        in ``out``; put what ``_out`` returned into ``out``. After a stage
+        fails, start nothing more, wait for the running stages and raise
+        the first error."""
+        sc = spark.sparkContext
+        done: queue.SimpleQueue = queue.SimpleQueue()
+
+        def stage(name: str, build: Callable[[], DataFrame]) -> None:
+            try:
+                # a description, not a job group: the caller's group stays
+                sc.setJobDescription(f"engine.{name}")
+                out[name] = self._out(name, build())
+                done.put((name, None))
+            except BaseException as exc:  # re-raised by the scheduling thread
+                done.put((name, exc))
+
+        waiting, running = dict(stages), {}
+        error: BaseException | None = None
+        while True:
+            if error is None:
+                for name, (inputs, build) in list(waiting.items()):
+                    if all(i in out for i in inputs):
+                        del waiting[name]
+                        running[name] = InheritableThread(
+                            partial(stage, name, build),
+                            name=f"engine.{name}",
+                            session=spark,
+                        )
+                        running[name].start()
+            if not running:
+                break
+            name, exc = done.get()
+            running.pop(name).join()
+            error = error or exc
+        if error is not None:
+            raise error

@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import json
 import re
+import sys
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -104,6 +107,27 @@ def _sessions(spark):
         [(i, u, s, t, d) for i, u, s, t, d in rows],
         "id long, uid string, scriptid string, ingested_at string, data string",
     ).withColumn("ingested_at", F.col("ingested_at").cast("timestamp"))
+
+
+# every Engine.run stage, in the order of run's returned dict, with the
+# stages it reads
+STAGE_INPUTS = {
+    "bronze": (),
+    "deduplicated": ("bronze",),
+    "admissions": ("deduplicated",),
+    "admissions_mcl": ("deduplicated",),
+    "discharges": ("deduplicated",),
+    "discharges_mcl": ("deduplicated",),
+    "admissions_fixed": ("admissions",),
+    "discharges_fixed": ("discharges",),
+    "summary_admissions": ("admissions_fixed",),
+    "joined": ("admissions_fixed", "discharges_fixed"),
+    "union_view": ("joined",),
+    "convenience": ("joined",),
+    "summary_counts": ("convenience",),
+    "clean_admissions": ("convenience",),
+    "merged_all": ("admissions_fixed", "discharges_fixed"),
+}
 
 
 def _engine():
@@ -387,8 +411,110 @@ def test_engine_materialize_hook(spark):
     seen = []
     eng = _engine()
     eng._mat = lambda name, df: seen.append(name) or df
+    out = eng.run(_sessions(spark))
+    # every stage is hooked once; the returned keys keep the stage order
+    assert sorted(seen) == sorted(STAGE_INPUTS)
+    assert list(out) == list(STAGE_INPUTS)
+
+
+def _downstream(stage):
+    found, todo = set(), [stage]
+    while todo:
+        s = todo.pop()
+        for name, inputs in STAGE_INPUTS.items():
+            if s in inputs and name not in found:
+                found.add(name)
+                todo.append(name)
+    return found
+
+
+def test_engine_runs_independent_stages_together(spark):
+    """union_view and convenience read only joined, so both reach the hook
+    before either returns; run one after the other, the barrier times
+    out."""
+    barrier = threading.Barrier(2, timeout=60)
+
+    def materialize(name, df):
+        if name in ("union_view", "convenience"):
+            barrier.wait()
+        return df
+
+    eng = _engine()
+    eng._mat = materialize
     eng.run(_sessions(spark))
-    assert "deduplicated" in seen and "clean_admissions" in seen
+
+
+def test_engine_hook_waits_for_its_inputs(spark):
+    """No stage reaches the hook before every stage it reads has returned
+    from it, the tidy outputs share one build, and each stage's jobs carry
+    the description engine.<stage> under the caller's job group, which the
+    run leaves alone."""
+    sc = spark.sparkContext
+    lock = threading.Lock()
+    log, props = [], {}
+
+    def materialize(name, df):
+        with lock:
+            log.append(("start", name))
+        props[name] = (
+            sc.getLocalProperty("spark.job.description"),
+            sc.getLocalProperty("spark.jobGroup.id"),
+        )
+        time.sleep(0.1)
+        with lock:
+            log.append(("end", name))
+        return df
+
+    eng = _engine()
+    eng._mat = materialize
+    tidy_calls = []
+    tidy = eng.tidy
+    eng.tidy = lambda deduped: tidy_calls.append(1) or tidy(deduped)
+    interval = sys.getswitchinterval()
+    sc.setJobGroup("caller", "caller's job")
+    sys.setswitchinterval(1e-6)
+    try:
+        eng.run(_sessions(spark))
+        assert sc.getLocalProperty("spark.job.description") == "caller's job"
+    finally:
+        sys.setswitchinterval(interval)
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+    pos = {event: k for k, event in enumerate(log)}
+    for name, inputs in STAGE_INPUTS.items():
+        for i in inputs:
+            assert pos[("end", i)] < pos[("start", name)], (i, name)
+    assert props == {name: (f"engine.{name}", "caller") for name in STAGE_INPUTS}
+    assert len(tidy_calls) == 1
+
+
+def test_engine_stage_error_stops_downstream(spark):
+    """A hook that raises fails the run with its own exception; no stage
+    that reads the failed one reaches the hook and no stage thread
+    outlives the run."""
+
+    class Boom(Exception):
+        pass
+
+    hooked, threads = [], []
+
+    def materialize(name, df):
+        hooked.append(name)
+        threads.append(threading.current_thread())
+        if name == "admissions_fixed":
+            raise Boom(name)
+        return df
+
+    eng = _engine()
+    eng._mat = materialize
+    with pytest.raises(Boom, match="admissions_fixed"):
+        eng.run(_sessions(spark))
+    assert "admissions_fixed" in hooked
+    assert not _downstream("admissions_fixed") & set(hooked)
+    me = threading.current_thread()
+    assert not any(t.is_alive() for t in threads if t is not me)
 
 
 def test_cli_main_runs_all_stages(spark):
