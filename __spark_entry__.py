@@ -49,9 +49,7 @@ def oracle_sql() -> dict[str, str]:
     PageRank loops, greedy stateful assignment, power-iteration PCA,
     BPE merge training, an HLL++/KLL sketch profile). They take the
     driver's weaker rows-only check BY DESIGN and can never show
-    hash-green in a driver window, so they are kept OUT of the
-    `_DRIVER_FRONT` rotation (a window slot on them reports
-    err:no_oracle instead of a hash row). Each is pinned by an
+    hash-green in a driver window. Each is pinned by an
     independent pandas/numpy twin in tests/test_no_oracle_parity.py:
     exact-Jaccard soundness+completeness for the LSH/simhash family,
     brute-force hamming / quantized-cosine recomputation + recall@10

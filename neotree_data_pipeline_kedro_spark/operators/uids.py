@@ -9,19 +9,37 @@ gets a freshly minted NeoTree id ``[A-Z0-9]{2}ZZ-\\d{4}`` (random, collision
 Random minting is not reproducible across a distributed re-run, so ids here
 are a deterministic hash of (uid, date, salt) in the same surface format:
 ``upper(md5[0:2]) + 'ZZ-' + translate(md5[2:6], 'abcdef', '012345')``.
-Collisions (with existing uids or between minted ids) are resolved in ONE
-pass: the collided groups — a tiny set, real uids almost never carry the
-``ZZ`` infix and the minted space is ~2.6M ids — are collected to the
-driver, candidate ids for salts 1..N are probed against the taken set with
-a single semi-join, and the resolution mapping broadcasts back. No
-iterative lineage, no per-round actions (the round-2 shape re-scanned the
-input once per salt round).
+The repair is one lazy plan, with no driver-side action at build time:
+every re-minted episode gets its candidate ids for salts 0.._SALTS, one
+window over the candidate id marks the taken ones (a real or existing uid,
+a salt-0 mint of a smaller episode, or any salt-0 mint for a later salt),
+and the collided episodes — a tiny set, real uids almost never carry the
+``ZZ`` infix and the minted space is ~2.6M ids — are resolved greedily in
+(uid, date) order by one ``aggregate`` lambda in a single global group.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+# a collided episode tries salts 1.._SALTS before the repair fails
+_SALTS = 8
+
+# over the collided episodes in (uid, date) order: each takes its first
+# candidate that is neither taken nor picked by an earlier episode
+_PICK = f"""
+inline(zip_with(
+  eps,
+  aggregate(eps, CAST(array() AS array<string>), (picked, e) -> concat(picked, array(
+    coalesce(
+      try_element_at(
+        filter(e.cands, c -> NOT c.taken AND NOT array_contains(picked, c.id)), 1).id,
+      raise_error(format_string(
+        'uid repair: no free surrogate id for episode (%s, %s) within {_SALTS} salts',
+        e.u, e.d)))))),
+  (e, p) -> struct(e.u AS u, e.d AS d, p AS new_uid)))
+"""
 
 
 def minted_uid(uid: Column, date: Column, salt: int | Column = 0) -> Column:
@@ -40,102 +58,69 @@ def repair_duplicate_uids(
     uid_col: str = "uid",
     date_col: str = "date_admission",
     existing_uids: DataFrame | None = None,
-    max_rounds: int = 8,
 ) -> DataFrame:
     """Return df with ``uid`` rewritten so each (uid, admission-date) episode
     has a distinct id: the first date per uid (ascending, NULLs first — the
     reference keeps whichever row it iterates first; this is the documented
     deterministic choice) keeps the original, later dates get minted ids.
+    Rows with a null uid or a null date keep their uid. The output columns
+    are ``uid_col``, ``date_col``, then the rest of df's in order.
 
     ``existing_uids``: optional single-column frame of ids already taken
     (the reference's ``row_exists`` collision probe against
-    public.sessions).
+    public.sessions). If an episode finds no free id within ``_SALTS``
+    salts, the query fails when it runs.
     """
-    groups = df.select(uid_col, date_col).distinct()
-    w = Window.partitionBy(uid_col).orderBy(F.col(date_col).asc_nulls_first())
-    ranked = groups.withColumn("__rk", F.row_number().over(w))
-    keep = ranked.filter(F.col("__rk") == 1).select(
-        uid_col, date_col, F.col(uid_col).alias("new_uid")
+    uid, date = F.col(uid_col), F.col(date_col)
+    ranked = df.withColumn(
+        "__rk", F.dense_rank().over(Window.partitionBy(uid).orderBy(date.asc_nulls_first()))
     )
-    remint = ranked.filter(F.col("__rk") > 1).select(uid_col, date_col)
-
-    taken = df.select(F.col(uid_col).alias("taken")).distinct()
+    # a row with a null uid keeps it, and a null date always ranks first,
+    # so neither mints an id
+    cands = (
+        ranked.filter((F.col("__rk") > 1) & uid.isNotNull() & date.isNotNull())
+        .select(uid.alias("u"), date.alias("d"))
+        .distinct()
+        .withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(_SALTS))))
+        .withColumn("id", minted_uid(F.col("u"), F.col("d"), F.col("salt")))
+    )
+    taken = df.select(uid.alias("id"))
     if existing_uids is not None:
-        ex = existing_uids.select(
-            F.col(existing_uids.columns[0]).alias("taken")
-        ).distinct()
-        taken = taken.unionByName(ex).distinct()
-
-    minted = remint.withColumn(
-        "new_uid", minted_uid(F.col(uid_col), F.col(date_col), 0)
-    ).persist()
-
-    # collision: minted id equals a taken uid, or two groups minted alike.
-    # The collided set is tiny (see module docstring); ONE action collects it.
-    dup_w = Window.partitionBy("new_uid").orderBy(
-        F.col(uid_col), F.col(date_col).asc_nulls_first()
+        taken = taken.unionByName(
+            existing_uids.select(F.col(existing_uids.columns[0]).alias("id"))
+        )
+    # a candidate is taken when its id is a real or existing uid (a row
+    # without a salt), when it is a salt-0 id a smaller episode also mints,
+    # or when it is a later salt's id that any episode mints at salt 0
+    by_id = Window.partitionBy("id")
+    first0 = F.min(F.when(F.col("salt") == 0, F.struct("u", "d"))).over(by_id)
+    taken_flag = F.max(F.col("salt").isNull()).over(by_id) | F.when(
+        F.col("salt") == 0, F.struct("u", "d") > first0
+    ).otherwise(first0.isNotNull())
+    episodes = (
+        cands.unionByName(taken, allowMissingColumns=True)
+        .withColumn("taken", taken_flag)
+        # keep the candidate rows by their non-null (u, d), the join keys:
+        # Catalyst then infers no null filter for one branch of `mapping`
+        # alone, and both branches share one shuffle
+        .filter(F.col("u").isNotNull() & F.col("d").isNotNull())
+        .groupBy("u", "d")
+        .agg(F.sort_array(F.collect_list(F.struct("salt", "id", "taken"))).alias("cands"))
     )
-    collided = (
-        minted.withColumn("__dup", F.row_number().over(dup_w))
-        .join(taken, F.col("new_uid") == F.col("taken"), "left")
-        .filter(F.col("taken").isNotNull() | (F.col("__dup") > 1))
-        .select(uid_col, date_col)
-        .collect()
+    collided = F.col("cands")[0]["taken"]
+    resolved = (
+        episodes.filter(collided)
+        .agg(F.sort_array(F.collect_list(F.struct("u", "d", "cands"))).alias("eps"))
+        .selectExpr(_PICK)
     )
-    if collided:
-        spark = df.sparkSession
-        key_schema = minted.select(uid_col, date_col).schema
-        groups_df = spark.createDataFrame(collided, key_schema)
-        cands = groups_df.crossJoin(
-            spark.range(1, max_rounds + 1).select(F.col("id").alias("__salt"))
-        ).withColumn(
-            "cand", minted_uid(F.col(uid_col), F.col(date_col), F.col("__salt"))
-        )
-        # one probe: which candidates are already taken (by real uids or by
-        # any salt-0 minted id, collided or not)
-        taken_plus = taken.unionByName(
-            minted.select(F.col("new_uid").alias("taken"))
-        )
-        burned = {
-            r["cand"]
-            for r in cands.join(
-                taken_plus, F.col("cand") == F.col("taken"), "left_semi"
-            ).collect()
-        }
-        by_group: dict[tuple, list] = {}
-        for r in cands.collect():
-            by_group.setdefault((r[uid_col], r[date_col]), []).append(
-                (r["__salt"], r["cand"])
-            )
-        resolved = []
-        for key in sorted(by_group, key=lambda k: (str(k[0]), str(k[1]))):
-            pick = next(
-                (c for _, c in sorted(by_group[key]) if c not in burned), None
-            )
-            if pick is None:
-                raise RuntimeError(
-                    f"uid repair: no free surrogate id for group {key} "
-                    f"within {max_rounds} salts"
-                )
-            burned.add(pick)  # later groups must not reuse it
-            resolved.append((*key, pick))
-        res_df = F.broadcast(
-            spark.createDataFrame(
-                resolved,
-                minted.select(uid_col, date_col).schema.add(
-                    "__resolved_uid", "string"
-                ),
-            )
-        )
-        minted = (
-            minted.join(res_df, [uid_col, date_col], "left")
-            .withColumn("new_uid", F.coalesce("__resolved_uid", F.col("new_uid")))
-            .drop("__resolved_uid")
-        )
-
-    mapping = keep.unionByName(minted.select(uid_col, date_col, "new_uid"))
+    mapping = (
+        episodes.filter(~collided)
+        .select("u", "d", F.col("cands")[0]["id"].alias("new_uid"))
+        .unionByName(resolved)
+        .withColumnsRenamed({"u": uid_col, "d": date_col})
+    )
     return (
         df.join(mapping, [uid_col, date_col], "left")
-        .withColumn(uid_col, F.coalesce("new_uid", F.col(uid_col)))
+        .withColumn(uid_col, F.coalesce("new_uid", uid))
         .drop("new_uid")
     )

@@ -87,6 +87,26 @@ DEFAULT_SCRIPT_OVERRIDES = {
 }
 
 
+def _session_keys(script_overrides: dict[str, str] | None) -> tuple[Column, Column]:
+    """The ``(uid, scriptid)`` of an exploded session row (``data`` holds its
+    JSON, ``src_file`` its export file): the envelope uid, repaired from the
+    entries when null, and the script id, rerouted per export file. Shared by
+    the happy path and the quarantine audit so the two cannot drift apart."""
+    overrides = (
+        DEFAULT_SCRIPT_OVERRIDES if script_overrides is None else script_overrides
+    )
+    scriptid = F.get_json_object("data", "$.script.id")
+    for suffix, sid in overrides.items():
+        scriptid = F.when(
+            F.col("src_file").endswith(suffix), F.lit(sid)
+        ).otherwise(scriptid)
+    uid = repair_uid(
+        F.get_json_object("data", "$.uid"),
+        F.get_json_object("data", "$.entries"),
+    )
+    return uid, scriptid
+
+
 def read_session_files(
     spark,
     path_glob: str,
@@ -115,9 +135,6 @@ def read_session_files(
     """
     from ..functions.timestamps import parse_timestamp_multi
 
-    overrides = (
-        DEFAULT_SCRIPT_OVERRIDES if script_overrides is None else script_overrides
-    )
     files = spark.read.text(path_glob, wholetext=True)
     sess = files.select(
         F.input_file_name().alias("src_file"),
@@ -125,20 +142,10 @@ def read_session_files(
             F.from_json("value", "STRUCT<sessions: ARRAY<STRING>>")["sessions"]
         ).alias("pos", "data"),
     )
-    scriptid = F.get_json_object("data", "$.script.id")
-    for suffix, sid in overrides.items():
-        scriptid = F.when(
-            F.col("src_file").endswith(suffix), F.lit(sid)
-        ).otherwise(scriptid)
+    uid, scriptid = _session_keys(script_overrides)
     out = (
         sess.withColumn("id", F.xxhash64("src_file", "pos"))
-        .withColumn(
-            "uid",
-            repair_uid(
-                F.get_json_object("data", "$.uid"),
-                F.get_json_object("data", "$.entries"),
-            ),
-        )
+        .withColumn("uid", uid)
         .withColumn("scriptid", scriptid)
         .withColumn(
             "ingested_at",
@@ -177,9 +184,6 @@ def scan_quarantine(
     Returns ``(src_file, session_pos, reason)`` with ``session_pos`` null
     for file-level rows.
     """
-    overrides = (
-        DEFAULT_SCRIPT_OVERRIDES if script_overrides is None else script_overrides
-    )
     files = spark.read.text(path_glob, wholetext=True).select(
         F.input_file_name().alias("src_file"),
         # PERMISSIVE from_json yields a null-FIELDS struct for malformed
@@ -204,15 +208,7 @@ def scan_quarantine(
         "src_file",
         F.posexplode(F.col("__env")["sessions"]).alias("pos", "data"),
     )
-    scriptid = F.get_json_object("data", "$.script.id")
-    for suffix, sid in overrides.items():
-        scriptid = F.when(
-            F.col("src_file").endswith(suffix), F.lit(sid)
-        ).otherwise(scriptid)
-    uid = repair_uid(
-        F.get_json_object("data", "$.uid"),
-        F.get_json_object("data", "$.entries"),
-    )
+    uid, scriptid = _session_keys(script_overrides)
     session_level = (
         sess.withColumn(
             "reason",

@@ -13,6 +13,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from neotree_data_pipeline_kedro_spark.operators.uids import repair_duplicate_uids
 from neotree_data_pipeline_kedro_spark.plans.pipeline import Engine, EngineConfig
 
 
@@ -388,6 +389,42 @@ def test_engine_stages_run_no_python(stage_plans):
     assert "merged_all" in stage_plans
     for name, plan in stage_plans.items():
         assert not python_node.search(plan), name
+
+
+def test_uid_repair_builds_without_jobs(spark, tmp_path):
+    """Building the duplicate-uid repair over a written table starts no
+    Spark job: the collision check is part of the plan, not a driver-side
+    collect at build time."""
+    path = str(tmp_path / "admissions")
+    spark.createDataFrame(
+        [("A", "2024-01", 1), ("A", "2024-02", 2)], "uid string, da string, rid int"
+    ).write.parquet(path)
+    adm = spark.read.parquet(path)
+    existing = spark.createDataFrame([("B",)], "uid string")
+    sc = spark.sparkContext
+    sc.setJobGroup("uid-repair-build", "build only")
+    try:
+        repair_duplicate_uids(adm, "uid", "da", existing)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("uid-repair-build")) == []
+
+
+def test_engine_run_leaves_no_cached_frame(spark, tmp_path):
+    """A materialized run persists nothing it does not release."""
+    jsc = spark.sparkContext._jsc
+
+    def materialize(name, df):
+        df.write.mode("overwrite").parquet(str(tmp_path / name))
+        return spark.read.parquet(str(tmp_path / name))
+
+    eng = _engine()
+    eng._mat = materialize
+    before = jsc.getPersistentRDDs().size()
+    eng.run(_sessions(spark))
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_engine_reconcile_completes_open_rows(spark):
