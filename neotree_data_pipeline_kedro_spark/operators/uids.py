@@ -16,6 +16,10 @@ a salt-0 mint of a smaller episode, or any salt-0 mint for a later salt),
 and the collided episodes — a tiny set, real uids almost never carry the
 ``ZZ`` infix and the minted space is ~2.6M ids — are resolved greedily in
 (uid, date) order by one ``aggregate`` lambda in a single global group.
+
+D8 runs only in the registry query ``d8_duplicate_uid_repair``. The
+Engine keeps one session per (uid, scriptid), so its admissions table has
+no uid with a second episode to repair (``plans.pipeline.Engine``).
 """
 
 from __future__ import annotations

@@ -23,7 +23,9 @@ intermediate remains independently inspectable, preserving the reference's
 derived-schema contract.
 
 Per-stage semantics live in the operator modules (cited there); this file
-only wires them.
+only wires them. The reference's passes over several episodes of one uid
+(the D8 uid repair, the J2 best match, ``merge_all``'s admission dedup)
+are not wired: the Engine's key leaves them nothing to do (see ``Engine``).
 """
 
 from __future__ import annotations
@@ -44,7 +46,7 @@ from ..functions.buckets import bw_group, gest_group, temp_group
 from ..functions.neolab import canonicalize_organism
 from ..functions.timestamps import parse_timestamp_multi
 from ..operators.dedup import dedupe_keep_latest
-from ..operators.joins import best_match_join, tiered_asof_assignment
+from ..operators.joins import tiered_asof_assignment
 from ..operators.labels import repair_dataframe_labels
 from ..operators.redact import redact
 from ..operators.tidy import (
@@ -53,7 +55,6 @@ from ..operators.tidy import (
     prune_junk_columns,
 )
 from ..operators.sinks import reconcile_update
-from ..operators.uids import repair_duplicate_uids
 from ..sources.sessions import entry_rows, explode_mcl, repair_uid
 
 log = logging.getLogger(__name__)
@@ -96,7 +97,6 @@ class EngineConfig:
     facility_map: dict[str, str] = field(default_factory=dict)
     field_info: dict[str, dict[str, Any]] = field(default_factory=dict)
     pivot_keys: dict[str, Sequence[str]] = field(default_factory=dict)
-    confidential_extra: Sequence[str] = ()
 
 
 def lifecycle_union(
@@ -146,11 +146,12 @@ def lifecycle_union(
     return out
 
 
-def _lit_map(d: dict[str, str]):
+def _lit_map(d: dict[str, str]) -> Column:
     from itertools import chain
 
     if not d:
-        return F.create_map()
+        # typed, so a lookup in it is a null string
+        return F.create_map().cast("map<string,string>")
     return F.create_map(
         *chain.from_iterable((F.lit(k), F.lit(v)) for k, v in d.items())
     )
@@ -163,6 +164,16 @@ class Engine:
     stage — the warehouse-write hook (parquet/Delta path or temp view); its
     return value (``df`` when it returns None) is what later stages read.
     By default stages stay lazy.
+
+    Each script's table holds one row per uid: ``deduplicate`` keeps the
+    latest session per (uid, scriptid), so there is one admission and at
+    most one discharge per uid. The reference keeps a session per
+    (scriptid, uid, unique_key) and needs passes that resolve several
+    episodes of a uid; under this key they change no row, so no stage runs
+    them. Their operators stay for the registry: ``repair_duplicate_uids``
+    (D8) in ``d8_duplicate_uid_repair`` and ``best_match_join`` (J2) in
+    ``j1_j2_fuzzy_best_match``. Two script ids that map to one table name
+    are rejected.
 
     ``run`` builds each stage on its own thread, started as soon as every
     stage it reads has returned from ``materialize``: ``bronze`` ->
@@ -183,6 +194,14 @@ class Engine:
         config: EngineConfig,
         materialize: Callable[[str, DataFrame], DataFrame] | None = None,
     ):
+        tables: dict[str, str] = {}
+        for scriptid, name in config.scripts.items():
+            if name in tables:
+                raise ValueError(
+                    f"Engine: script ids {tables[name]!r} and {scriptid!r} "
+                    f"both map to the table {name!r}; map each to its own table"
+                )
+            tables[name] = scriptid
         self.config = config
         self._mat = materialize
 
@@ -263,8 +282,9 @@ class Engine:
 
     # -- stages 4/5: manual fixes (step_3) ---------------------------------
     def fix_records(self, wide: DataFrame, script: str) -> DataFrame:
-        """Label repair from metadata + duplicate-uid repair (D8) + organism
-        canonicalization when neolab columns are present."""
+        """Label repair from metadata + organism canonicalization when
+        neolab columns are present + the parsed ``admission_ts`` that
+        ``summary_tables`` and ``merge_all`` read."""
         fi = self.config.field_info.get(script, {})
         fixed = repair_dataframe_labels(wide, fi) if fi else wide
         if "Org1.value" in fixed.columns and "OtherOrg1.value" in fixed.columns:
@@ -278,9 +298,6 @@ class Engine:
             fixed = fixed.withColumn(
                 "admission_ts",
                 parse_timestamp_multi(F.col("`DateTimeAdmission.value`")),
-            )
-            fixed = repair_duplicate_uids(
-                fixed, "uid", "admission_ts"
             )
         return fixed
 
@@ -301,13 +318,10 @@ class Engine:
     # -- stage 7: join_tables (step_4; create_joined_table_and_derived_
     # columns.py:268-394) --------------------------------------------------
     def join_tables(self, adm: DataFrame, dis: DataFrame) -> DataFrame:
-        """Admission->discharge left join on uid with the reference's
-        clinical match score resolving fan-out per admission (J1+J2):
-        OFC closeness (max 10, -1/cm), Gestation closeness (max 10, -1/wk),
-        BirthWeight closeness (max 5, -1/500g); no comparable fields => -1
-        and the tiebreak (latest discharge) decides, mirroring the
-        reference's keep-first-on-all--1 (calculate_match_score /
-        resolve_duplicate_matches)."""
+        """Admission->discharge left join on uid (J1), discharge columns
+        prefixed ``dis_``. A uid has at most one discharge (see ``Engine``),
+        so no fan-out is left for the reference's match score to resolve
+        (J2, resolve_duplicate_matches)."""
         d = dis.select(
             "uid",
             *[
@@ -316,33 +330,7 @@ class Engine:
                 if c != "uid"
             ],
         )
-
-        def score(j: DataFrame) -> Column:
-            def closeness(a: str, b: str, cap: int, scale: float = 1.0) -> Column:
-                if a not in j.columns or b not in j.columns:
-                    return F.lit(None).cast("double")
-                av = F.col(f"`{a}`").try_cast("double")
-                bv = F.col(f"`{b}`").try_cast("double")
-                return F.greatest(F.lit(0.0), cap - F.abs(av - bv) / scale)
-
-            parts = [
-                closeness("OFC.value", "dis_OFCDis.value", 10),
-                closeness("Gestation.value", "dis_Gestation.value", 10),
-                closeness("BirthWeight.value", "dis_BirthWeight.value", 5, 500.0),
-            ]
-            total = sum((F.coalesce(p, F.lit(0.0)) for p in parts), F.lit(0.0))
-            made = sum(
-                (F.when(p.isNotNull(), 1).otherwise(0) for p in parts), F.lit(0)
-            )
-            return F.when(made > 0, total).otherwise(F.lit(-1.0))
-
-        return best_match_join(
-            adm,
-            d,
-            ["uid"],
-            score=score,
-            tiebreak=[F.desc("dis_ingested_at"), F.desc("dis_id")],
-        )
+        return adm.join(d, ["uid"], "left")
 
     # -- stage 8: union_views (step_4; create_union_views.py) --------------
     def union_views(self, joined: DataFrame) -> DataFrame:
@@ -395,14 +383,15 @@ class Engine:
 
     # -- stage 13/14: merge_raw_data (step_7; merge_all.py:143-533) --------
     def merge_all(self, adm: DataFrame, dis: DataFrame) -> DataFrame:
-        """Merged ALL table: admissions deduped on (uid, facility,
-        admission datetime); the greedy tiered 1:1 assignment (J3b,
+        """Merged ALL table: the greedy tiered 1:1 assignment (J3b,
         merge_all.py:343-470) pairs each discharge with a free admission;
         matched pairs merge with discharge columns overwriting admission
         columns of the same name (merge_all.py:452 ``{**adm, **dis}``);
         leftovers keep their side; every row carries
         has_admission/has_discharge/is_closed/match_status
-        (merge_all.py:485-510)."""
+        (merge_all.py:485-510). The reference's admission dedup on (uid,
+        facility, admission datetime) (merge_all.py:281-287) keeps every
+        row under the Engine's key and is not run."""
 
         def num(df: DataFrame, names: Sequence[str]) -> Column:
             for n in names:
@@ -419,13 +408,6 @@ class Engine:
             if not parts:
                 return F.lit(None).cast("timestamp")
             return F.coalesce(*parts) if len(parts) > 1 else parts[0]
-
-        # dedup admissions on (uid, facility, admission datetime), min id
-        # wins for the reference's keep-first (merge_all.py:281-287)
-        dedup_keys: list = ["uid", "facility"]
-        if "DateTimeAdmission.value" in adm.columns:
-            dedup_keys.append(F.col("`DateTimeAdmission.value`"))
-        adm = dedupe_keep_latest(adm, dedup_keys, [F.asc("id")])
 
         adm_ts = (
             F.col("admission_ts")

@@ -204,6 +204,57 @@ def test_engine_end_to_end(spark):
         assert r["match_status"] == "unmatched_admission"
 
 
+def test_engine_keeps_one_row_per_uid(spark):
+    """The key the Engine's stages rely on: a uid uploaded twice as an
+    admission (different admission dates) and twice as a discharge
+    (different OFC) keeps its latest session per (uid, scriptid), and the
+    fixed, joined and ALL tables each hold one row per uid."""
+    def adm(uid, when):
+        e = json.loads(_new_entries(uid, 34, 2100, "Outcome", "DC"))
+        e["entries"]["DateTimeAdmission"]["values"]["value"] = [when]
+        return json.dumps(e)
+
+    def dis(uid, ofc):
+        return json.dumps({"entries": {
+            "NeoTreeID": {"values": {"label": ["NeoTree ID"], "value": [uid]}},
+            "OFCDis": {"values": {"label": ["OFC"], "value": [ofc]}},
+        }})
+
+    sessions = spark.createDataFrame(
+        [
+            (1, "A7C6-0350", ADM_SCRIPT, adm("A7C6-0350", "2024-03-01T09:55:00")),
+            (2, "A7C6-0350", ADM_SCRIPT, adm("A7C6-0350", "2024-04-02T08:00:00")),
+            (3, "A7C6-0350", DIS_SCRIPT, dis("A7C6-0350", "33")),
+            (4, "A7C6-0350", DIS_SCRIPT, dis("A7C6-0350", "35")),
+            (5, "B111-0001", ADM_SCRIPT, adm("B111-0001", "2024-03-03T10:00:00")),
+        ],
+        "id long, uid string, scriptid string, data string",
+    ).withColumn("ingested_at", F.current_timestamp())
+    field_info = dict(FIELD_INFO, discharges={
+        **FIELD_INFO["discharges"],
+        "OFCDis": {"label": "OFC", "type": "number", "options": []},
+    })
+    out = Engine(
+        EngineConfig(
+            scripts={ADM_SCRIPT: "admissions", DIS_SCRIPT: "discharges"},
+            facility_map={ADM_SCRIPT: "Harare NNU", DIS_SCRIPT: "Harare NNU"},
+            field_info=field_info,
+        )
+    ).run(sessions)
+
+    assert sorted(r.id for r in out["deduplicated"].collect()) == [2, 4, 5]
+    for name in ("admissions_fixed", "joined", "merged_all"):
+        rows = out[name].collect()
+        assert sorted(r["uid"] for r in rows) == ["A7C6-0350", "B111-0001"], name
+    fixed = {r["uid"]: r for r in out["admissions_fixed"].collect()}
+    assert fixed["A7C6-0350"]["DateTimeAdmission.value"] == "2024-04-02T08:00:00"
+    joined = {r["uid"]: r for r in out["joined"].collect()}
+    assert joined["A7C6-0350"]["dis_OFCDis.value"] == "35"
+    assert joined["B111-0001"]["dis_id"] is None
+    allt = {r["uid"]: r for r in out["merged_all"].collect()}
+    assert allt["A7C6-0350"]["is_closed"] and not allt["B111-0001"]["is_closed"]
+
+
 def test_engine_from_json_files(tmp_path, spark):
     """S1 front half: real .json export files through read_session_files
     into Engine.run (import_raw_jsons.py:31-215)."""
@@ -389,6 +440,17 @@ def test_engine_stages_run_no_python(stage_plans):
     assert "merged_all" in stage_plans
     for name, plan in stage_plans.items():
         assert not python_node.search(plan), name
+
+
+def test_engine_runs_no_multi_episode_pass(stage_plans):
+    """With one row per uid and script, the Engine runs none of the
+    reference's passes over several episodes of a uid: admissions_fixed
+    shuffles nothing (no D8 uid repair), and no window ranks rows in
+    admissions_fixed, joined (no J2 best match) or merged_all (no
+    admission re-dedup)."""
+    assert not re.search(r"\w*Exchange\b", stage_plans["admissions_fixed"])
+    for name in ("admissions_fixed", "joined", "merged_all"):
+        assert not re.search(r"\bWindow\b", stage_plans[name]), name
 
 
 def test_uid_repair_builds_without_jobs(spark, tmp_path):
@@ -588,6 +650,36 @@ def test_tidy_requires_field_metadata(spark):
     bronze = eng.import_raw(sess)
     with pytest.raises(ValueError, match="pivot_keys nor field_info"):
         eng.tidy(eng.deduplicate(bronze))
+
+
+def test_engine_rejects_two_scripts_for_one_table():
+    """Two script ids mapped to one table name would overwrite each other's
+    tidy table and shift the discharge script; the Engine refuses them."""
+    msg = "'-A1' and '-A2' both map to the table 'admissions'"
+    with pytest.raises(ValueError, match=msg):
+        Engine(
+            EngineConfig(
+                scripts={"-A1": "admissions", "-A2": "admissions", "-D": "discharges"},
+                field_info=FIELD_INFO,
+            )
+        )
+
+
+def test_engine_default_facility_map(spark):
+    """Without a facility_map every facility is null and the stages still
+    build: the discharge pairs with its admission in the ALL table."""
+    out = Engine(
+        EngineConfig(
+            scripts={ADM_SCRIPT: "admissions", DIS_SCRIPT: "discharges"},
+            field_info=FIELD_INFO,
+        )
+    ).run(_sessions(spark))
+    assert {r.facility for r in out["bronze"].collect()} == {None}
+    assert [tuple(r) for r in out["summary_counts"].collect()] == [(None, 3, 3)]
+    allt = {r["uid"]: r for r in out["merged_all"].collect()}
+    assert len(allt) == 3
+    assert allt["A7C6-0350"]["is_closed"]
+    assert allt["A7C6-0350"]["NeoTreeOutcome.value"] == "DC"
 
 
 def test_engine_two_cycle_incremental_delta(tmp_path, spark):
