@@ -26,7 +26,7 @@ DIS_SCRIPT = "-SCRIPT-DIS"
 _FIELD_INFO = {
     "admissions": {
         "Gestation": {"type": "number"},
-        "BW": {"type": "number"},
+        "BirthWeight": {"type": "number"},
         "Temperature": {"type": "number"},
         "DateTimeAdmission": {"type": "datetime"},
         "NeoTreeID": {"type": "text"},

@@ -16,13 +16,7 @@ from .buckets import (
     under_28wks_1kg,
 )
 from .nulls import NULL_TOKENS, UID_JUNK_TOKENS, nullify, nullify_uid
-from .strings import (
-    duration_to_hours,
-    extract_first_number,
-    extract_years,
-    sanitize_field_name,
-    sanitize_sql_name,
-)
+from .strings import duration_to_hours, extract_first_number, extract_years
 from .timestamps import parse_timestamp_multi
 from .text import (
     doc_fingerprint,
@@ -49,8 +43,6 @@ __all__ = [
     "nullify_uid",
     "parse_timestamp_multi",
     "quality_score_components",
-    "sanitize_field_name",
-    "sanitize_sql_name",
     "temp_group",
     "temp_thermia",
     "token_count",

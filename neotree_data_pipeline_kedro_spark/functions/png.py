@@ -2,7 +2,7 @@
 
 Exists so the multimodal operators can do REAL byte-level decode work in an
 environment without PIL/opencv: the engine's image path (encode for test
-synthesis, decode/resize/frame-sample in operators/multimodal.py) runs on
+synthesis, decode/frame-sample in operators/multimodal.py) runs on
 actual PNG bytes end-to-end. Supported: 8-bit non-interlaced greyscale
 (color type 0), RGB (2), and RGBA (6); all five scanline filters on decode,
 filter 0 on encode (what this encoder emits; foreign PNGs with Sub/Up/Avg/
@@ -108,14 +108,6 @@ def decode_png(data: bytes) -> np.ndarray:
                     c = int(prev[x - ch]) if x >= ch else 0
                     row[x] = (int(line[x]) + _paeth(a, b, c)) & 0xFF
     return out.reshape(height, width, ch)
-
-
-def resize_nearest(pixels: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resize (the deterministic, dependency-free kernel)."""
-    h, w = pixels.shape[:2]
-    ys = (np.arange(height) * h // height).clip(0, h - 1)
-    xs = (np.arange(width) * w // width).clip(0, w - 1)
-    return pixels[ys][:, xs]
 
 
 # --- minimal WAV (RIFF/PCM16) codec: the audio twin of the PNG path -------

@@ -6,12 +6,8 @@ implements these as row-at-a-time Python; here they stay JVM-side.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from .nulls import nullify
 
 _INT_TOKEN = r"(?:^|\s)(\d+)(?:\s|$)"
 
@@ -101,18 +97,6 @@ def maternal_age_years(col: Column | str) -> Column:
     ).try_cast("double")  # "1.2.3"-style residue → NULL → 200 sentinel, ANSI-safe
     years = F.when(num > 100000, num / 8766).otherwise(num)
     return F.coalesce(F.floor(years), F.lit(200)).cast("bigint")
-
-
-def sanitize_field_name(name: str) -> str:
-    """Repeatables/diagnoses child-key sanitizer ``re.sub(r'\\W+','_')``
-    (extract_key_values.py:257-258)."""
-    return re.sub(r"\W+", "_", name)
-
-
-def sanitize_sql_name(name: str) -> str:
-    """Column-name normalization ``[()-] → _``
-    (tidy_admissions_discharges_and_create_mcl_tables.py:440)."""
-    return re.sub(r"[()\-]", "_", name)
 
 
 # American Soundex letter→code map (A..Z): vowels + H/W/Y → 0,

@@ -5,24 +5,16 @@ canonical document per group. The reference engine has no graph operator;
 this closes the standard LLM-training-data gap (LSH pairs → clusters →
 keep-one) as a first-class extension alongside SURVEY §2.
 
-Two independent DataFrame-only implementations, used as twins in tests:
+``connected_components`` is DataFrame-only iterative min-label propagation
+with cluster contraction. Each round: (1) neighbor-min, (2) push the round's
+best min up to each OLD cluster root and back down to every member, so a
+newly found min reaches the whole cluster in one round — O(log n) rounds,
+not O(diameter). Labels only ever decrease, so convergence is detected by
+the (monotone) sum of labels going flat — one cheap aggregate action per
+round, no change-join. Lineage is truncated with ``localCheckpoint`` every
+round so the plan doesn't grow with iterations.
 
-* ``connected_components`` — iterative min-label propagation with cluster
-  contraction. Each round: (1) neighbor-min, (2) push the round's best min
-  up to each OLD cluster root and back down to every member, so a newly
-  found min reaches the whole cluster in one round — O(log n) rounds, not
-  O(diameter). Labels only ever decrease, so convergence is detected by the
-  (monotone) sum of labels going flat — one cheap aggregate action per
-  round, no change-join. Lineage is truncated with ``localCheckpoint``
-  every round so the plan doesn't grow with iterations.
-
-* ``connected_components_star`` — alternating large-star/small-star
-  (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14).
-  O(log² n) rounds regardless of diameter; the right choice when the edge
-  set may contain adversarially long chains. Kept as the independent twin
-  and the documented fallback for pathological graphs.
-
-Both return one row per node with ``comp`` = the minimum node id reachable
+It returns one row per node with ``comp`` = the minimum node id reachable
 from it, i.e. a canonical, deterministic component id. Singleton nodes keep
 ``comp = id``.
 """
@@ -343,100 +335,6 @@ def incremental_components(
         base.join(F.broadcast(m), "comp", "left")
         .select("id", F.coalesce("__root", "comp").alias("comp"))
     )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    nodes: DataFrame | None = None,
-    max_iter: int = 50,
-) -> DataFrame:
-    """Alternating large-star/small-star (Kiveris et al. SoCC'14 §3).
-
-    large-star: every neighbor v > u links to m(u) = min(u, neighbors(u));
-    small-star: every neighbor v ≤ u (and u itself) links to m(u).
-    The edge list converges to stars rooted at component minima in
-    O(log² n) rounds; convergence is detected by the edge set mapping every
-    node straight to a fixpoint root (one round with no change in the
-    canonical edge sum).
-    """
-    edges_sym = _sym_edges(edges, src, dst).localCheckpoint(eager=True)
-    isolated = None
-    if nodes is not None:
-        isolated = (
-            _nodes(edges_sym, nodes)
-            .join(edges_sym.select(F.col("u").alias("id")).distinct(), "id", "left_anti")
-        )
-
-    e = edges_sym
-    prev_sig = None
-    for _ in range(max_iter):
-        # large-star over the SYMMETRIZED edge set: every neighbor v > u
-        # links to m(u) = min(neighbors(u) ∪ {u}); m-edges keep u attached.
-        sym = (
-            e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        m = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least(F.col("u"), F.col("mn")).alias("m"))
-        )
-        large = (
-            sym.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        e = (
-            large.union(m.select(F.col("u"), F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star over the (max → min)-ORIENTED edge set: u and every
-        # smaller neighbor link to m(u) = min of the smaller neighbors.
-        ori = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        m2 = ori.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            ori.join(m2, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        e = (
-            small.union(m2.select(F.col("u"), F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        sig = e.select(
-            F.greatest("u", "v").alias("a"), F.least("u", "v").alias("b")
-        ).agg(
-            F.count("*"),
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
-        ).collect()[0]
-        sig = (sig[0], sig[1])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-
-    # after convergence every edge points child -> root (v = component min)
-    comp = e.groupBy("u").agg(F.min("v").alias("comp")).select(
-        F.col("u").alias("id"), "comp"
-    )
-    roots = (
-        e.select(F.col("v").alias("id"))
-        .distinct()
-        .join(comp.select("id"), "id", "left_anti")
-        .withColumn("comp", F.col("id"))
-    )
-    out = comp.union(roots)
-    if isolated is not None:
-        out = out.union(isolated.withColumn("comp", F.col("id")))
-    return out
 
 
 def dedup_groups(

@@ -281,9 +281,7 @@ def histogram_bucket(
     value, lo: float, hi: float, buckets: int = 64
 ):
     """Clamped equi-width bucket id for ``value`` over [lo, hi) — the
-    shared derivation behind histogram_state and the streaming
-    histogram maintainer (streaming/incremental.
-    run_foreach_batch_histogram): out-of-range values count at the
+    derivation behind histogram_state: out-of-range values count at the
     edges instead of minting invalid bucket ids."""
     b = F.floor(
         (F.col(value) - F.lit(lo)) * F.lit(float(buckets)) / F.lit(hi - lo)

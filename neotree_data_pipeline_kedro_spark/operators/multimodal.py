@@ -1,8 +1,8 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media payloads are opaque ``binary`` columns with typed metadata structs;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages. Image decode/resize and video frame-sampling are
+decode / feature-extract / frame-sample run as Arrow-batched
+``mapInPandas`` stages. Image decode and video frame-sampling are
 REAL byte-level implementations over the pure-stdlib PNG codec and VID0
 frame container in ``functions/png.py`` (PIL/ffmpeg are not in this
 container; JPEG/MP4 would slot into the same mapInPandas stages). Audio
@@ -89,30 +89,6 @@ def decode_image(
             yield pd.DataFrame(out)
 
     return src.mapInPandas(run, schema=DECODED_SCHEMA)
-
-
-def resize_image(
-    df: DataFrame, id_col: str, binary_col: str, width: int, height: int
-) -> DataFrame:
-    """Decode → nearest-neighbor resize → re-encode, Arrow-batched:
-    (id, png binary of the resized image)."""
-    from ..functions.png import decode_png, encode_png, resize_nearest
-
-    src = df.select(F.col(id_col).alias("id"), F.col(binary_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, out = [], []
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                try:
-                    px = decode_png(payload)
-                except Exception:
-                    continue
-                ids.append(i)
-                out.append(encode_png(resize_nearest(px, width, height)))
-            yield pd.DataFrame({"id": ids, "png": out})
-
-    return src.mapInPandas(run, schema="id bigint, png binary")
 
 
 AUDIO_SCHEMA = (

@@ -548,25 +548,13 @@ def simhash_candidates(
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<float|double> columns via sequential
-    fold (zip_with product + aggregate sum) — deterministic summation order,
-    stable across engines for oracle comparison."""
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(ad, bd, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-    na = F.sqrt(F.aggregate(F.transform(ad, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
-    nb = F.sqrt(F.aggregate(F.transform(bd, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
-    return dot / (na * nb)
-
-
 def quantize_vec(col: Column, scale: int = 1_000_000) -> Column:
     """Quantize array<float> to array<bigint> (round half away from zero).
 
     Integer dot products / norms are then EXACT and order-independent —
     bit-identical across Spark, DuckDB, or any engine — while differing from
-    float cosine by < 1e-5. Used by the oracle-checked similarity queries;
-    `cosine` stays the raw float path."""
+    float cosine by < 1e-5. Used by the oracle-checked similarity
+    queries."""
     return F.transform(
         col, lambda x: F.round(x.cast("double") * scale, 0).cast("bigint")
     )

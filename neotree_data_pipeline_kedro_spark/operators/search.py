@@ -103,28 +103,6 @@ def bm25_topk(
     )
 
 
-def tfidf_vectors(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Sparse TF-IDF rows: (id, term, tf, df, tfidf) with
-    ``tfidf = tf * ln(N / df)`` — the classic weighting, exposed for
-    downstream cosine / clustering stages."""
-    post = postings(docs, id_col, text_col)
-    df_t = post.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    n = docs.agg(F.count("*").cast("double").alias("n_docs"))
-    return (
-        post.join(df_t, "term")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "id",
-            "term",
-            "tf",
-            F.col("df").cast("bigint").alias("df"),
-            (F.col("tf").cast("double") * F.log(F.col("n_docs") / F.col("df"))).alias(
-                "tfidf"
-            ),
-        )
-    )
-
-
 def rbo_weights(p: float = 0.9, depth: int = 10, scale: int = 10**15) -> list[int]:
     """Exact integer suffix weights for fixed-depth rank-biased overlap
     (Webber, Moffat & Zobel 2010, eq. 4 truncated at ``depth``).

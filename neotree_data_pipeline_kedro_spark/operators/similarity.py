@@ -1,5 +1,6 @@
 """Similarity search over embedding columns (BASELINE.json north-star
-extension): brute-force cosine top-k baseline + IVF/LSH-bucketed scale path.
+extension): brute-force cosine top-k baseline + IVF and signature-LSH
+scale paths.
 
 Scale shape: queries are small (broadcast), the corpus is the 100 TB side —
 a single map pass computes scores, a top-k window per query reduces. The
@@ -25,60 +26,13 @@ from pyspark.sql import types as T
 from .neardup import _splitmix64, pair_cosine, prep_vectors
 
 
-def _hyperplane_buckets_df(
-    df: DataFrame, id_col: str, vec_col: str, planes: int, tables: int
-) -> DataFrame:
-    """(id, tbl, bucket) sign-buckets for ``tables`` independent hyperplane
-    sets, computed as one numpy GEMM per Arrow batch — the expression-tree
-    version paid planes x dim hash calls per row. Coefficients are
-    deterministic (splitmix64 of (table, plane, dim)), so corpus and query
-    sides always agree."""
-    out_schema = T.StructType(
-        [
-            T.StructField("id", df.schema[id_col].dataType),
-            T.StructField("tbl", T.IntegerType()),
-            T.StructField("bucket", T.LongType()),
-        ]
-    )
-    weights = (1 << np.arange(planes)).astype(np.int64)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        coef = None
-        for pdf in it:
-            if not len(pdf):
-                continue
-            x = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            if coef is None:
-                dim = x.shape[1]
-                coef = np.empty((tables * planes, dim), dtype=np.float64)
-                for t in range(tables):
-                    for p in range(planes):
-                        for j in range(dim):
-                            coef[t * planes + p, j] = (
-                                1.0
-                                if _splitmix64((t * 1009 + p) * 1_000_003 + j) & 1
-                                else -1.0
-                            )
-            signs = (x @ coef.T) > 0  # rows x (tables*planes)
-            buckets = signs.reshape(len(pdf), tables, planes) @ weights
-            yield pd.DataFrame(
-                {
-                    "id": np.repeat(pdf[id_col].to_numpy(), tables),
-                    "tbl": np.tile(np.arange(tables, dtype=np.int32), len(pdf)),
-                    "bucket": buckets.reshape(-1),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(batches, schema=out_schema)
-
-
 def _signature_df(
     df: DataFrame, id_col: str, vec_col: str, bits: int
 ) -> DataFrame:
     """(id, sig) where ``sig`` is a ``bits``-bit SimHash signature packed
     into ``bits/64`` longs — one numpy GEMM per Arrow batch. Coefficients
-    use the same deterministic splitmix64 scheme as
-    ``_hyperplane_buckets_df`` (table 0), so both sides always agree."""
+    are deterministic (splitmix64 of (plane, dim)), so corpus and query
+    sides always agree."""
     if bits % 64:
         raise ValueError(f"bits must be a multiple of 64, got {bits}")
     words = bits // 64
@@ -141,8 +95,7 @@ def simhash_rerank_topk(
     (measured: 16 planes x 128 tables = recall 0.16 @ 0.8%; 4x8 = 0.74 @
     41%). Long signatures concentrate the same projections instead of
     thresholding them: 512 bits at m=5% measures recall@10 = 0.80 / 0.92 /
-    0.96 on the sf0.001/0.01/0.1 corpora. Real clustered corpora can use
-    ``lsh_bucket_topk``; this is the robust default.
+    0.96 on the sf0.001/0.01/0.1 corpora.
 
     Scale shape (FAISS IndexBinaryFlat pattern): the prefilter scans
     64-byte codes with XOR+popcount (JVM ``bit_count`` expressions, no
@@ -555,78 +508,6 @@ def ivf_topk(
     )
 
 
-def lsh_bucket_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 10,
-    planes: int = 4,
-    tables: int = 8,
-    query_id_col: str | None = None,
-    scale: int | None = 1_000_000,
-) -> DataFrame:
-    """Multi-table LSH approximate top-k: ``tables`` independent
-    random-hyperplane sign buckets of ``planes`` bits each; a candidate is
-    any corpus vector sharing a bucket with the query in ANY table
-    (recall = 1-(1-q^planes)^tables for per-plane agreement prob q — one
-    6-plane table measured recall@10 = 0.14 on the sf0.001 corpus; 8x4
-    measures 0.8 at sf0.001 / 0.66 at sf0.01 on the driver's near-uniform
-    synthetic embeddings, floor pinned in tests. Real embedding corpora
-    cluster, which raises q for true neighbors and recall with it).
-
-    Scale shape: corpus side is exploded x``tables`` but carries only
-    (table, bucket, id) plus the prepped vector; per-table joins stay
-    bucket-local and candidates are deduped per (query, neighbor) BEFORE
-    scoring, so each survivor is scored once. Tune planes up / tables down
-    to trade scan fraction (~tables/2^planes) against recall.
-    """
-    integer = scale is not None
-    qid = query_id_col or id_col
-
-    # candidate generation on narrow (id, tbl, bucket) rows only
-    cq = _hyperplane_buckets_df(
-        queries.select(F.col(qid).alias("query_id"), vec_col),
-        "query_id", vec_col, planes, tables,
-    ).withColumnRenamed("id", "query_id")
-    cc = _hyperplane_buckets_df(
-        corpus.select(F.col(id_col).alias("neighbor_id"), vec_col),
-        "neighbor_id", vec_col, planes, tables,
-    ).withColumnRenamed("id", "neighbor_id")
-    cand_ids = (
-        cc.join(F.broadcast(cq), ["tbl", "bucket"])
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-
-    # score each surviving pair once, vectors prepped per side
-    q = prep_vectors(queries, qid, vec_col, scale).select(
-        F.col("id").alias("query_id"),
-        F.col("__v").alias("__qv"),
-        F.col("__n").alias("__qn"),
-    )
-    c = prep_vectors(corpus, id_col, vec_col, scale).select(
-        F.col("id").alias("neighbor_id"), "__v", "__n"
-    )
-    cand = (
-        cand_ids.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            pair_cosine(
-                F.col("__qv"), F.col("__qn"), F.col("__v"), F.col("__n"), integer=integer
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
-
-
 def ann_join_ivf(
     indexed_corpus: DataFrame,
     centroids: DataFrame,
@@ -1006,270 +887,6 @@ def ivfpq_topk(
         .drop("__rn", "adc_dist")
     )
     return _exact_rerank(short, corpus, queries, id_col, vec_col, k, scale)
-
-
-def save_ann_index(
-    index: DataFrame,
-    codebooks: np.ndarray,
-    centroids: DataFrame,
-    path: str,
-    vectors: DataFrame | None = None,
-) -> None:
-    """Persist an IVFPQ index to a warehouse directory: the (id, cell,
-    codes) frame partitioned BY CELL — so a search that probes nprobe
-    cells reads nprobe directories, nothing else — plus the codebooks
-    (flattened to rows) and centroids as small side tables. Everything is
-    plain parquet: any engine reads it back.
-
-    ``vectors`` (optional, ``(id, vec)``): seed the index's raw-vector
-    sidecar at ``vectors/batch=base``. An index that intends to RETRAIN
-    its quantizers (``maintain_ann_index``/``retrain_ann_index``) must
-    own its vectors — PQ codes are not invertible — which is exactly
-    what production vector stores do (FAISS/Milvus keep the originals
-    alongside the compressed index)."""
-    (
-        index.withColumn("batch", F.lit("base"))
-        .write.mode("overwrite")
-        .partitionBy("batch", "cell")
-        .parquet(f"{path}/codes")
-    )
-    m, ksub, dsub = codebooks.shape
-    spark = index.sparkSession
-    rows = [
-        (j, c, [float(x) for x in codebooks[j, c]])
-        for j in range(m)
-        for c in range(ksub)
-    ]
-    spark.createDataFrame(
-        rows, "subspace int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-    centroids.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    if vectors is not None:
-        (
-            vectors.withColumn("batch", F.lit("base"))
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .parquet(f"{path}/vectors")
-        )
-
-
-def append_ann_index(
-    delta: DataFrame, path: str, id_col: str, vec_col: str, *, batch_id: str
-) -> DataFrame:
-    """Incremental IVFPQ index maintenance: encode ONLY the delta
-    vectors against the index's FROZEN centroids and codebooks (read
-    back from ``path``) and land their (id, cell, codes) rows as a NEW
-    ``batch=<batch_id>`` partition of the codes directory — the
-    standard production cadence (quantizers re-train offline
-    occasionally; between re-trains, new vectors land in O(|delta|)
-    with zero rewrite of existing batches' files, and every search
-    sees them immediately because probes prune on the ``cell``
-    partition column, which is shared by all batches).
-
-    Re-run-safe by a staged publish: the encoded delta is staged to an
-    underscore-prefixed sibling directory (invisible to parquet readers)
-    and published with ONE atomic ``os.rename`` into
-    ``codes/batch=<batch_id>``; a
-    crashed-and-retried batch finds its directory already published
-    and skips the write entirely, so no delta row can land twice.
-    (On object stores without atomic rename, publish through a
-    manifest/catalog instead — same caveat as ``compact_parquet``.)
-
-    The cost of frozen quantizers is assignment drift — as the data
-    distribution moves, cells skew — so this returns the DELTA's
-    per-cell counts (computed from the staged batch itself, never by
-    re-scanning the whole index) for the caller's re-train trigger
-    (the skew report IS the maintenance contract, not a side effect).
-
-    Returns: (cell, n_appended) — one row per cell the delta touched;
-    on a skipped re-run, the same report re-read from the published
-    batch directory.
-    """
-    import os
-    import re
-
-    # The batch id becomes a literal partition-directory component and
-    # the path feeds os.path/os.rename directly: reject anything that
-    # could corrupt Spark partition discovery ('/', '=', '%xx' escapes)
-    # or silently defeat the exists-check idempotency (URI schemes /
-    # non-local paths, where os.path.exists is permanently False and
-    # every retry would re-encode then crash in os.rename).
-    if not re.fullmatch(r"[A-Za-z0-9_.-]+", batch_id):
-        raise ValueError(
-            f"append_ann_index: batch_id {batch_id!r} must match "
-            "[A-Za-z0-9_.-]+ (it names a partition directory)"
-        )
-    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*://|file:", path):
-        raise ValueError(
-            f"append_ann_index: path {path!r} must be a plain local "
-            "filesystem path (the staged-rename publish uses os.rename; "
-            "route object-store indexes through a manifest/catalog)"
-        )
-    spark = delta.sparkSession
-    target = f"{path}/codes/batch={batch_id}"
-    if not os.path.exists(target):
-        _, books, centroids = load_ann_index(spark, path)
-        indexed = build_ivfpq_index(delta, centroids, books, id_col, vec_col)
-        staging = f"{path}/_stage_codes_{batch_id}"
-        indexed.write.mode("overwrite").partitionBy("cell").parquet(staging)
-        os.rename(staging, target)
-    return (
-        spark.read.parquet(target)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_appended"))
-    )
-
-
-def maintain_ann_index(
-    delta: DataFrame,
-    path: str,
-    id_col: str,
-    vec_col: str,
-    *,
-    batch_id: str,
-    skew_ratio: float = 4.0,
-) -> dict:
-    """One turn of the production ANN maintenance loop (VERDICT r10
-    #7b): land the delta's raw vectors in the index's vector sidecar
-    (``vectors/batch=<id>``, staged-rename idempotent like the codes
-    append), encode-and-append its codes against the frozen quantizers
-    (``append_ann_index``), then read the WHOLE index's per-cell
-    occupancy and decide whether assignment drift has skewed the cells
-    enough to warrant a quantizer re-train — the decision
-    ``append_ann_index``'s skew report exists to feed.
-
-    The trigger is ``max_cell / mean_cell > skew_ratio`` over the full
-    codes table (a partition-column-only scan — cell is a directory
-    name, so this reads parquet FOOTERS, not code rows). When it fires,
-    run ``retrain_ann_index`` in the index's maintenance window; this
-    function only reports, so the ingest path never blocks on a
-    rebuild.
-
-    Returns {"batch_id", "appended", "cells_touched", "max_cell",
-    "mean_cell", "skew", "retrain"}."""
-    import os
-    import re
-
-    spark = delta.sparkSession
-    vec_target = f"{path}/vectors/batch={batch_id}"
-    # append_ann_index re-validates batch_id/path; do vectors first so a
-    # crash between the two writes replays into staged-rename skips
-    report = None
-    if not os.path.exists(vec_target):
-        if not re.fullmatch(r"[A-Za-z0-9_.-]+", batch_id):
-            raise ValueError(
-                f"maintain_ann_index: batch_id {batch_id!r} must match "
-                "[A-Za-z0-9_.-]+ (it names a partition directory)"
-            )
-        staging = f"{path}/_stage_vectors_{batch_id}"
-        delta.select(id_col, vec_col).write.mode("overwrite").parquet(staging)
-        os.rename(staging, vec_target)
-    report = append_ann_index(delta, path, id_col, vec_col, batch_id=batch_id)
-    appended = report.agg(F.sum("n_appended")).first()[0] or 0
-    cells_touched = report.count()
-    occ = (
-        spark.read.parquet(f"{path}/codes")
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.max("n").alias("mx"),
-            F.avg("n").alias("mean"),
-        )
-        .first()
-    )
-    skew = float(occ["mx"]) / float(occ["mean"])
-    return {
-        "batch_id": batch_id,
-        "appended": int(appended),
-        "cells_touched": int(cells_touched),
-        "max_cell": int(occ["mx"]),
-        "mean_cell": float(occ["mean"]),
-        "skew": round(skew, 4),
-        "retrain": skew > skew_ratio,
-    }
-
-
-def retrain_ann_index(
-    spark,
-    path: str,
-    id_col: str,
-    vec_col: str,
-    *,
-    k: int | None = None,
-    m: int = 8,
-    nbits: int = 4,
-) -> None:
-    """Re-train an IVFPQ index's quantizers from its OWN vector sidecar
-    and re-partition every vector under the new cells — the offline leg
-    of the maintenance loop that ``maintain_ann_index``'s skew trigger
-    schedules. Centroids come from a fresh distributed k-means over ALL
-    vectors (base + every appended batch), codebooks from ``pq_train``
-    on the same corpus, and the full codes table is rebuilt. Each
-    component is then replaced through sources/warehouse's directory
-    swap; a swap interrupted by a crash is recovered before anything is
-    read.
-
-    After the swap the index answers ``ivfpq_topk`` EXACTLY as a
-    from-scratch ``build_ivfpq_index`` over the current vector set
-    (pinned in pytest) — appends since the last re-train are folded in,
-    and the cell layout reflects the CURRENT distribution, not the
-    base one.
-
-    Single-writer maintenance-window semantics (the compact_parquet
-    caveat): the three component swaps are individually atomic but not
-    jointly — a reader racing the swap can probe new centroids against
-    old codes. Run it where the warehouse runs compaction: with readers
-    drained."""
-    import os
-    import shutil
-
-    from ..sources.warehouse import _publish_swap, _recover_swap, _swap_paths
-
-    comps = ("codes", "codebooks", "centroids")
-    for comp in comps:
-        _recover_swap(f"{path}/{comp}")
-    vec_dir = f"{path}/vectors"
-    vectors = spark.read.parquet(vec_dir).select(id_col, vec_col)
-    if k is None:
-        k = spark.read.parquet(f"{path}/centroids").count()
-    cents_pdf = kmeans_fit(vectors, id_col, vec_col, k=int(k))
-    cents = spark.createDataFrame(
-        [
-            (int(r.centroid_id), [float(x) for x in r.centroid_vec])
-            for r in cents_pdf.itertuples()
-        ],
-        "centroid_id bigint, centroid_vec array<double>",
-    )
-    books = pq_train(vectors, id_col, vec_col, m=m, nbits=nbits)
-    index = build_ivfpq_index(vectors, cents, books, id_col, vec_col)
-
-    stage = f"{path}/_stage_retrain"
-    if os.path.isdir(stage):
-        shutil.rmtree(stage)  # crashed previous retrain: rebuild fully
-    save_ann_index(index, books, cents, stage)
-
-    for comp in comps:
-        live = f"{path}/{comp}"
-        # the staged component becomes the swap's tmp sibling
-        os.rename(f"{stage}/{comp}", _swap_paths(live)[0])
-        _publish_swap(live)
-    shutil.rmtree(stage)
-
-
-def load_ann_index(spark, path: str):
-    """Load a persisted IVFPQ index: returns (index_df, codebooks,
-    centroids_df) ready for ``ivfpq_topk``. The codes read keeps cell as a
-    partition column, so probe filters prune directories."""
-    index = spark.read.parquet(f"{path}/codes")
-    cb = spark.read.parquet(f"{path}/codebooks").toPandas()
-    m = int(cb["subspace"].max()) + 1
-    ksub = int(cb["code"].max()) + 1
-    dsub = len(cb["centroid"].iloc[0])
-    books = np.empty((m, ksub, dsub))
-    for r in cb.itertuples():
-        books[r.subspace, r.code] = np.asarray(r.centroid)
-    centroids = spark.read.parquet(f"{path}/centroids")
-    return index, books, centroids
 
 
 def maxsim_topk(

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.booleans import bool_map
@@ -180,67 +180,6 @@ def reconcile_update(
         else:
             out.append(cur)
     return joined.select(*out)
-
-
-def cascade_delete_keys(
-    spark: SparkSession,
-    warehouse_dir: str,
-    keys: DataFrame,
-    key_col: str,
-    stages: Sequence[str] | None = None,
-) -> dict[str, int]:
-    """Right-to-be-forgotten cascade: remove every row matching a key list
-    from every stage table of a parquet warehouse — the deletion
-    counterpart of the reference's research clean-up sweep
-    (step_6_nodes/data_clean_up.py:229-259 iterates every derived table
-    applying a hygiene pass; here the pass is a key purge).
-
-    For each stage directory that has ``key_col``: LEFT ANTI join against
-    the broadcast key list (deletion lists are small by nature), then
-    replace the stage through sources/warehouse's directory swap —
-    readers never see a half-written table, and a swap interrupted by a
-    crash (here or in compaction) is recovered before the stage is
-    read. Stages without the key column are skipped, not errored: a
-    warehouse mixes keyed facts and key-free rollups, and a purge must
-    not stop at the first summary table. Returns {stage: rows_deleted}.
-
-    Scale shape: one anti-join scan-and-rewrite per stage, no wide
-    shuffle (broadcast anti). At real scale prefer partition-aligned
-    deletes (rewrite only partitions whose min/max straddle a doomed key
-    — the Z-order/sort clustering makes that pruning effective).
-    """
-    import os
-
-    from ..sources.warehouse import (
-        _live_names,
-        _publish_swap,
-        _recover_swap,
-        _swap_paths,
-    )
-
-    klist = keys.select(F.col(key_col).cast("string").alias("__del_key")).distinct()
-    deleted: dict[str, int] = {}
-    names = stages if stages is not None else _live_names(warehouse_dir)
-    for name in names:
-        stage_dir = os.path.join(warehouse_dir, name)
-        _recover_swap(stage_dir)
-        if not os.path.isdir(stage_dir):
-            continue
-        df = spark.read.parquet(stage_dir)
-        if key_col not in df.columns:
-            continue
-        before = df.count()
-        kept = df.join(
-            F.broadcast(klist),
-            df[key_col].cast("string") == F.col("__del_key"),
-            "left_anti",
-        )
-        tmp = _swap_paths(stage_dir)[0]
-        kept.write.mode("overwrite").parquet(tmp)
-        after = spark.read.parquet(tmp).count()
-        _publish_swap(stage_dir)
-        deleted[name] = before - after
-    return deleted
 
 
 def apply_cdc(

@@ -108,26 +108,6 @@ def column_profile(
     return row.select(F.explode(F.array(*structs)).alias("m")).select("m.*")
 
 
-def duplicate_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Duplicate-uid detection (validate.py:319-323): keys with count > 1."""
-    return (
-        df.groupBy(*keys)
-        .agg(F.count("*").alias("n_rows"))
-        .filter(F.col("n_rows") > 1)
-    )
-
-
-def iqr_outliers(
-    df: DataFrame, column: str, factor: float = 3.0, rel_err: float = 0.001
-) -> DataFrame:
-    """IQR outlier rows: outside Q1/Q3 ± factor·IQR (validate.py:713-745).
-    Quantiles via approxQuantile (distributed sketch, no sort)."""
-    q1, q3 = df.approxQuantile(column, [0.25, 0.75], rel_err)
-    iqr = q3 - q1
-    lo, hi = q1 - factor * iqr, q3 + factor * iqr
-    return df.filter((F.col(column) < lo) | (F.col(column) > hi))
-
-
 def range_violations(
     df: DataFrame, column: str, min_value: float | None, max_value: float | None
 ) -> DataFrame:
@@ -295,49 +275,6 @@ def _label_checks(
         )
         out.append((fld, v, actual, expected, mismatch))
     return out
-
-
-def value_label_mismatches(
-    df: DataFrame,
-    fields: Sequence[Mapping],
-    uid_col: str | None = "uid",
-    value_suffix: str = ".value",
-    label_suffix: str = ".label",
-) -> DataFrame:
-    """Row-level value↔label consistency (validate.py:566-609): for each
-    select-typed field with a non-empty options list, rows whose label column
-    is not the option's valueLabel for their value (case-insensitive; rows
-    with empty/unknown values are skipped). Returns one row per mismatch:
-    (uid?, base_key, value, actual_label, expected_label).
-
-    Single scan regardless of field count: every field's check is a struct in
-    one array, exploded then filtered — no per-field passes, all codegen."""
-    checks = _label_checks(df, fields, value_suffix, label_suffix)
-    if not checks:
-        return df.sparkSession.createDataFrame(
-            [],
-            "base_key string, value string, actual_label string, expected_label string",
-        )
-    id_cols = [F.col(uid_col)] if uid_col and uid_col in df.columns else []
-    exploded = df.select(
-        *id_cols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(fld["key"]).alias("base_key"),
-                        v.alias("value"),
-                        actual.alias("actual_label"),
-                        expected.alias("expected_label"),
-                        mismatch.alias("__bad"),
-                    )
-                    for fld, v, actual, expected, mismatch in checks
-                ]
-            )
-        ).alias("m"),
-    ).filter(F.col("m.__bad"))
-    return exploded.select(*id_cols, "m.base_key", "m.value", "m.actual_label",
-                           "m.expected_label")
 
 
 def value_label_consistency(
@@ -565,7 +502,6 @@ def fk_orphans(
     return orphans.agg(
         F.lit(label).alias("fk"), F.count(F.lit(1)).alias("n_orphans")
     )
-
 
 
 def grid_density_outliers(

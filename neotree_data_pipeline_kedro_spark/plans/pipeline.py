@@ -99,53 +99,6 @@ class EngineConfig:
     pivot_keys: dict[str, Sequence[str]] = field(default_factory=dict)
 
 
-def lifecycle_union(
-    merged: DataFrame | None,
-    adm_only: DataFrame | None,
-    dis_only: DataFrame | None,
-) -> DataFrame:
-    """Attach the ALL-table lifecycle columns and union the three branches
-    (merge_all.py:485-510): merged rows are has_admission & has_discharge &
-    is_closed; one-sided rows stay open. ``match_status`` defaults to
-    'matched' / 'unmatched_admission' / 'unmatched_discharge' when the
-    branch doesn't already carry one (the assignment operator's statuses
-    win when present)."""
-    parts: list[DataFrame] = []
-    if merged is not None:
-        m = merged
-        if "match_status" not in m.columns:
-            m = m.withColumn("match_status", F.lit("matched"))
-        parts.append(
-            m.withColumn("has_admission", F.lit(True))
-            .withColumn("has_discharge", F.lit(True))
-            .withColumn("is_closed", F.lit(True))
-        )
-    if adm_only is not None:
-        a = adm_only
-        if "match_status" not in a.columns:
-            a = a.withColumn("match_status", F.lit("unmatched_admission"))
-        parts.append(
-            a.withColumn("has_admission", F.lit(True))
-            .withColumn("has_discharge", F.lit(False))
-            .withColumn("is_closed", F.lit(False))
-        )
-    if dis_only is not None:
-        d = dis_only
-        if "match_status" not in d.columns:
-            d = d.withColumn("match_status", F.lit("unmatched_discharge"))
-        parts.append(
-            d.withColumn("has_admission", F.lit(False))
-            .withColumn("has_discharge", F.lit(True))
-            .withColumn("is_closed", F.lit(False))
-        )
-    if not parts:
-        raise ValueError("lifecycle_union: at least one branch is required")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
-
-
 def _lit_map(d: dict[str, str]) -> Column:
     from itertools import chain
 
@@ -202,6 +155,18 @@ class Engine:
                     f"both map to the table {name!r}; map each to its own table"
                 )
             tables[name] = scriptid
+        for kind, per_script in (
+            ("field_info", config.field_info),
+            ("pivot_keys", config.pivot_keys),
+        ):
+            for name, keys in per_script.items():
+                for key in keys:
+                    if key in KEY_RENAMES:
+                        raise ValueError(
+                            f"Engine: {kind}[{name!r}] names the key {key!r}, "
+                            f"which tidy renames to {KEY_RENAMES[key]!r}; "
+                            f"name {KEY_RENAMES[key]!r} instead"
+                        )
         self.config = config
         self._mat = materialize
 

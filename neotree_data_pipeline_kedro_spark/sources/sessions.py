@@ -87,26 +87,6 @@ DEFAULT_SCRIPT_OVERRIDES = {
 }
 
 
-def _session_keys(script_overrides: dict[str, str] | None) -> tuple[Column, Column]:
-    """The ``(uid, scriptid)`` of an exploded session row (``data`` holds its
-    JSON, ``src_file`` its export file): the envelope uid, repaired from the
-    entries when null, and the script id, rerouted per export file. Shared by
-    the happy path and the quarantine audit so the two cannot drift apart."""
-    overrides = (
-        DEFAULT_SCRIPT_OVERRIDES if script_overrides is None else script_overrides
-    )
-    scriptid = F.get_json_object("data", "$.script.id")
-    for suffix, sid in overrides.items():
-        scriptid = F.when(
-            F.col("src_file").endswith(suffix), F.lit(sid)
-        ).otherwise(scriptid)
-    uid = repair_uid(
-        F.get_json_object("data", "$.uid"),
-        F.get_json_object("data", "$.entries"),
-    )
-    return uid, scriptid
-
-
 def read_session_files(
     spark,
     path_glob: str,
@@ -142,7 +122,18 @@ def read_session_files(
             F.from_json("value", "STRUCT<sessions: ARRAY<STRING>>")["sessions"]
         ).alias("pos", "data"),
     )
-    uid, scriptid = _session_keys(script_overrides)
+    overrides = (
+        DEFAULT_SCRIPT_OVERRIDES if script_overrides is None else script_overrides
+    )
+    scriptid = F.get_json_object("data", "$.script.id")
+    for suffix, sid in overrides.items():
+        scriptid = F.when(
+            F.col("src_file").endswith(suffix), F.lit(sid)
+        ).otherwise(scriptid)
+    uid = repair_uid(
+        F.get_json_object("data", "$.uid"),
+        F.get_json_object("data", "$.entries"),
+    )
     out = (
         sess.withColumn("id", F.xxhash64("src_file", "pos"))
         .withColumn("uid", uid)
@@ -163,63 +154,6 @@ def read_session_files(
         ).dropDuplicates(["uid"])
         out = out.join(ex, "uid", "left_anti")
     return out
-
-def scan_quarantine(
-    spark,
-    path_glob: str,
-    script_overrides: dict[str, str] | None = None,
-) -> DataFrame:
-    """Malformed-input audit for the S1 scan — the rows
-    ``read_session_files`` silently drops, made visible for ops:
-
-    * file level: envelopes that fail to parse (``invalid_json``) or parse
-      without a ``sessions`` array (``no_sessions_array``);
-    * session level: sessions whose uid is unrecoverable even after entry
-      repair (``unrecoverable_uid``) or that carry no script id
-      (``missing_scriptid``).
-
-    Same single ``text(wholetext)`` scan shape as the happy path; run both
-    over one glob and every input is accounted for:
-    ``parsed sessions + session-level quarantine = exploded sessions``.
-    Returns ``(src_file, session_pos, reason)`` with ``session_pos`` null
-    for file-level rows.
-    """
-    files = spark.read.text(path_glob, wholetext=True).select(
-        F.input_file_name().alias("src_file"),
-        # PERMISSIVE from_json yields a null-FIELDS struct for malformed
-        # input, so invalid JSON is detected separately: get_json_object
-        # returns null only when the document itself doesn't parse
-        F.get_json_object("value", "$").alias("__doc"),
-        F.from_json("value", "STRUCT<sessions: ARRAY<STRING>>").alias("__env"),
-    )
-    file_level = (
-        files.withColumn(
-            "reason",
-            F.when(F.col("__doc").isNull(), "invalid_json").when(
-                F.col("__env")["sessions"].isNull(), "no_sessions_array"
-            ),
-        )
-        .filter(F.col("reason").isNotNull())
-        .select(
-            "src_file", F.lit(None).cast("int").alias("session_pos"), "reason"
-        )
-    )
-    sess = files.select(
-        "src_file",
-        F.posexplode(F.col("__env")["sessions"]).alias("pos", "data"),
-    )
-    uid, scriptid = _session_keys(script_overrides)
-    session_level = (
-        sess.withColumn(
-            "reason",
-            F.when(uid.isNull(), "unrecoverable_uid").when(
-                scriptid.isNull(), "missing_scriptid"
-            ),
-        )
-        .filter(F.col("reason").isNotNull())
-        .select("src_file", F.col("pos").cast("int").alias("session_pos"), "reason")
-    )
-    return file_level.unionByName(session_level)
 
 
 _REPEATABLE_META_KEYS = ("id", "createdAt", "requiredComplete", "hasCollectionField")
@@ -510,10 +444,3 @@ def explode_list_section(
         F.transform_keys("__children", lambda k, v: clean_child(k)).alias("fields"),
         *extra.keys(),
     )
-
-
-def app_version_number(col: Column) -> Column:
-    """``int(''.join(d for d in appVersion if d.isdigit()))``
-    (extract_key_values.py:34-36); empty/null → NULL."""
-    digits = F.regexp_replace(F.coalesce(col, F.lit("")), "[^0-9]", "")
-    return F.when(digits == "", F.lit(None)).otherwise(digits).try_cast("int")

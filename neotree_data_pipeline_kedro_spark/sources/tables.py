@@ -98,61 +98,3 @@ def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
     DuckDB oracle's pre-registered views."""
     for t in TABLES:
         load_table(spark, t, sf_dir).createOrReplaceTempView(t)
-
-
-def load_evolving(spark: SparkSession, path: str) -> DataFrame:
-    """Read a multi-batch parquet directory whose schema has EVOLVED across
-    batches (new columns appended over time — the normal life of a landing
-    zone). ``mergeSchema`` unions the footers at planning time: older files
-    surface the newer columns as nulls, so downstream code sees one stable
-    superset schema. Scan-time cost only — no rewrite of historical files,
-    and column pruning/pushdown still apply per file."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def load_text_landing(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-    fmt: str = "jsonl",
-    corrupt_col: str = "_corrupt_record",
-    **options: str,
-) -> tuple[DataFrame, DataFrame]:
-    """Landing-zone reader for text formats (``jsonl`` or ``csv``) with
-    corrupt-record quarantine: returns ``(good, quarantine)`` where
-    ``good`` rows parsed cleanly and ``quarantine`` carries each broken
-    line verbatim for triage — the text-format sibling of the raw-JSON
-    session scan's quarantine audit (sessions.scan_quarantine). Junk
-    lines never kill the run (PERMISSIVE), and nothing is silently
-    dropped (the reference's tolerant-ingest contract with receipts).
-
-    The declared ``schema`` (DDL string) is REQUIRED: schema inference
-    costs an extra full read of the landing zone and can flip types
-    between runs — a landing-zone contract should be stated, not
-    guessed. Column pruning and filter pushdown still apply to the
-    parsed columns.
-    """
-    full = f"{schema}, {corrupt_col} STRING"
-    reader = spark.read.schema(full).option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", corrupt_col
-    )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    if fmt == "jsonl":
-        df = reader.json(path)
-    elif fmt == "csv":
-        df = reader.csv(path)
-    else:
-        raise ValueError(f"load_text_landing: unknown fmt {fmt!r}")
-    # Spark requires caching/materialization before filtering on the
-    # corrupt column (the parser races the filter otherwise)
-    df = df.cache()
-    good = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    quarantine = df.filter(F.col(corrupt_col).isNotNull()).select(
-        F.col(corrupt_col).alias("raw_line")
-    )
-    return good, quarantine

@@ -53,37 +53,15 @@ def read_table(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: Sequence[str],
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Hive-style partitioned write (one directory per partition value).
-
-    The complement of bucketing for the time axis: the engine's derived
-    tables are re-read every cron cycle with a recency predicate
-    (ingested_at month, unique_key date prefix — assorted_queries.py's
-    NOT-EXISTS windows), and a partition column turns that predicate into
-    directory pruning — the scan never opens non-matching files
-    (PartitionFilters in explain; pinned in
-    tests/test_warehouse_bucketing.py). Choose low-cardinality columns
-    (month, facility): one directory per value, and files per partition
-    should stay in the hundreds of MB at 100 TB."""
-    df.write.format(fmt).mode(mode).partitionBy(*partition_cols).save(path)
-
-
 # ------------------------------------------------------------------ swap
-# The package's one way to replace a directory in place (compaction, the
-# cascade purge, the streaming rollup/census state, the ANN re-train):
-# write the new contents to the ``<live>.__rollup_tmp`` sibling, then
-# (live -> ``.__rollup_old``) -> (tmp -> live) -> rm old. A crash at any
-# point leaves the live dir or its old sibling on disk, never neither;
-# every caller runs ``_recover_swap`` before it reads the live dir, which
-# renames a dangling old sibling back and purges stale leftovers. The
-# sibling names are fixed, so a leftover from any earlier run is still
-# found. Local filesystem only (os.rename).
+# The package's one way to replace a directory in place (compaction and
+# the streaming rollup state): write the new contents to the
+# ``<live>.__rollup_tmp`` sibling, then (live -> ``.__rollup_old``) ->
+# (tmp -> live) -> rm old. A crash at any point leaves the live dir or its
+# old sibling on disk, never neither; every caller runs ``_recover_swap``
+# before it reads the live dir, which renames a dangling old sibling back
+# and purges stale leftovers. The sibling names are fixed, so a leftover
+# from any earlier run is still found. Local filesystem only (os.rename).
 
 
 def _swap_paths(live: str) -> tuple[str, str]:
@@ -115,15 +93,6 @@ def _publish_swap(live: str) -> None:
         shutil.rmtree(old)
     else:
         os.rename(tmp, live)
-
-
-def _live_names(parent: str) -> list[str]:
-    """Sorted entry names under ``parent``, each swap sibling folded into
-    the name of the live directory it belongs to."""
-    tmp_sfx, old_sfx = _swap_paths("")
-    return sorted(
-        {n.removesuffix(tmp_sfx).removesuffix(old_sfx) for n in os.listdir(parent)}
-    )
 
 
 def compact_parquet(
@@ -274,37 +243,6 @@ def minmax_prune_scan(
     )
 
 
-def overwrite_partitions(
-    df: DataFrame,
-    path: str,
-    partition_cols: Sequence[str],
-    fmt: str = "parquet",
-) -> None:
-    """DYNAMIC partition overwrite: replace exactly the partitions present
-    in ``df`` and leave every other partition untouched — the idempotent
-    reload primitive for late-arriving or corrected days (re-run one
-    day's extract without truncating the table, the reference's
-    delete-then-reinsert cycle for summary tables done at directory
-    granularity).
-
-    ``partitionOverwriteMode=dynamic`` is set per-write through the
-    DataFrameWriter option (not the session conf), so concurrent writers
-    with different intents don't race on a global setting. With the
-    default STATIC mode, mode("overwrite") + partitionBy would truncate
-    the WHOLE table first — the classic cron foot-gun this wrapper
-    exists to prevent. At scale the replaced unit is a directory rename,
-    never a rewrite of untouched partitions, and re-running the same
-    batch converges to the same bytes (idempotent reload).
-    """
-    (
-        df.write.format(fmt)
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .save(path)
-    )
-
-
 def write_snapshot(df: DataFrame, base_dir: str, fmt: str = "parquet") -> int:
     """Versioned snapshot write (time travel): ``stage_snapshot`` lands a
     complete immutable copy under ``base_dir/v=N``, then
@@ -318,8 +256,7 @@ def write_snapshot(df: DataFrame, base_dir: str, fmt: str = "parquet") -> int:
     it was for run 17"), diffable snapshots (j14_table_diff between two
     versions), and safe concurrent readers during writes. Full copies
     per version: use for dimension/summary-sized tables, not the raw
-    100 TB fact layer (there, overwrite_partitions + partition-level
-    manifests play this role).
+    fact layer.
     """
     version = stage_snapshot(df, base_dir, fmt)
     publish_snapshot(base_dir, version)

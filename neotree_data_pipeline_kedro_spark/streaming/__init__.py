@@ -1,12 +1,5 @@
 """Batch-incremental & Structured Streaming wrappers (SURVEY.md §2.9)."""
 
-from .incremental import incremental_sink, run_available_now
-from .sessions import sessionize_stream
-from .windows import windowed_indicator_rollup
+from .incremental import incremental_sink
 
-__all__ = [
-    "incremental_sink",
-    "run_available_now",
-    "sessionize_stream",
-    "windowed_indicator_rollup",
-]
+__all__ = ["incremental_sink"]

@@ -1,5 +1,5 @@
-"""Connected-components twins: min-label propagation vs the independent
-large-star/small-star implementation must agree on every graph, and both
+"""Connected-components twins: the distributed min-label propagation loop
+and its small-graph local fast path must agree on every graph, and both
 must match a driver-side union-find on small fixtures."""
 
 from __future__ import annotations
@@ -8,7 +8,6 @@ import pytest
 
 from neotree_data_pipeline_kedro_spark.operators.components import (
     connected_components,
-    connected_components_star,
     dedup_groups,
 )
 
@@ -55,17 +54,14 @@ def test_cc_twins_and_unionfind(spark, name):
     # local_threshold=0 forces the distributed label-prop loop; the default
     # small-graph fast path is covered by test_cc_local_path_matches
     lp = connected_components(edf, nodes=ndf, local_threshold=0)
-    star = connected_components_star(edf, nodes=ndf)
     local = connected_components(edf, nodes=ndf)
     expect = _uf(edges, set(nodes))
 
     got_lp = {r["id"]: r["comp"] for r in lp.collect()}
-    got_star = {r["id"]: r["comp"] for r in star.collect()}
     got_local = {r["id"]: r["comp"] for r in local.collect()}
     want = dict(expect)
     want[999] = 999
     assert got_lp == want, f"{name}: labelprop vs union-find"
-    assert got_star == want, f"{name}: star vs union-find"
     assert got_local == want, f"{name}: local fast path vs union-find"
 
 

@@ -57,29 +57,3 @@ def test_fk_orphans_zero_on_clean_data(spark):
     fact = spark.createDataFrame([(1,), (1,), (2,)], "fk int")
     dim = spark.createDataFrame([(1,), (2,)], "pk int")
     assert fk_orphans(fact, "fk", dim, "pk").collect()[0].n_orphans == 0
-
-
-def test_cascade_delete_keys_purges_keyed_stages_only(spark, tmp_path):
-    from neotree_data_pipeline_kedro_spark.operators.sinks import (
-        cascade_delete_keys,
-    )
-
-    wh = tmp_path / "wh"
-    users = spark.createDataFrame(
-        [(i, f"u{i}") for i in range(10)], "uid int, name string"
-    )
-    facts = spark.createDataFrame(
-        [(i % 10, i) for i in range(50)], "uid int, v int"
-    )
-    rollup = spark.createDataFrame([(50,)], "total int")  # key-free: skipped
-    users.write.parquet(str(wh / "users"))
-    facts.write.parquet(str(wh / "facts"))
-    rollup.write.parquet(str(wh / "rollup"))
-
-    doomed = spark.createDataFrame([(3,), (7,), (99,)], "uid int")  # 99 absent
-    deleted = cascade_delete_keys(spark, str(wh), doomed, "uid")
-
-    assert deleted == {"users": 2, "facts": 10}
-    assert spark.read.parquet(str(wh / "users")).filter("uid in (3,7)").count() == 0
-    assert spark.read.parquet(str(wh / "facts")).count() == 40
-    assert spark.read.parquet(str(wh / "rollup")).collect()[0].total == 50

@@ -1,16 +1,10 @@
 """§2.9 incremental/streaming sinks: NOT-EXISTS batch increments
-(assorted_queries.py:241-252) and the Trigger.AvailableNow twin, plus the
-mutable-sink write path (upsert) round-tripping through parquet."""
+(assorted_queries.py:241-252) and the foreachBatch rollup over a file
+stream."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from neotree_data_pipeline_kedro_spark.streaming.incremental import (
-    incremental_sink,
-    run_available_now,
-)
+from neotree_data_pipeline_kedro_spark.streaming.incremental import incremental_sink
 
 
 def test_incremental_sink_appends_only_new_keys(spark, tmp_path):
@@ -24,72 +18,6 @@ def test_incremental_sink_appends_only_new_keys(spark, tmp_path):
     assert rows == {1: "a", 2: "b", 3: "c"}  # first write wins (NOT EXISTS)
     # idempotent re-run: nothing appended
     assert incremental_sink(spark, b2, sink, ["id"]) == 0
-
-
-def test_run_available_now_checkpointed(spark, tmp_path):
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
-    )
-    spark.createDataFrame([(1, "a"), (2, "b")], schema).write.parquet(src)
-
-    run_available_now(
-        spark, src, schema,
-        lambda df: df.withColumn("v", F.upper("v")),
-        sink, ckpt,
-    )
-    assert {r.v for r in spark.read.parquet(sink).collect()} == {"A", "B"}
-
-    # new file arrives; re-run processes ONLY it (checkpoint offsets)
-    spark.createDataFrame([(3, "c")], schema).write.mode("append").parquet(src)
-    run_available_now(
-        spark, src, schema,
-        lambda df: df.withColumn("v", F.upper("v")),
-        sink, ckpt,
-    )
-    out = {r.id: r.v for r in spark.read.parquet(sink).collect()}
-    assert out == {1: "A", 2: "B", 3: "C"}
-
-
-def test_foreach_batch_upsert_suppresses_cross_batch_dupes(spark, tmp_path):
-    """Streaming foreachBatch upsert: duplicates across micro-batches AND
-    across separate stream runs are suppressed by the durable sink guard;
-    a replayed batch does not double-append."""
-    import os
-    import time as _time
-
-    from neotree_data_pipeline_kedro_spark.streaming.incremental import (
-        run_foreach_batch_upsert,
-    )
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ck = str(tmp_path / "ck")
-    schema = "uid string, payload string"
-
-    def drop(name, rows, age):
-        path = os.path.join(src, name)
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
-        m = _time.time() - age
-        for root, _, files in os.walk(path):
-            for f in files:
-                os.utime(os.path.join(root, f), (m, m))
-
-    drop("b0.parquet", [("A", "first-A"), ("B", "first-B")], 200)
-    drop("b1.parquet", [("A", "dup-A"), ("C", "first-C")], 150)
-    run_foreach_batch_upsert(spark, src + "/*", schema, sink, ck, ["uid"])
-    got = {r.uid: r.payload for r in spark.read.parquet(sink).collect()}
-    assert got == {"A": "first-A", "B": "first-B", "C": "first-C"}
-
-    # a later run with new + duplicate keys: only the new key lands
-    drop("b2.parquet", [("A", "dup-A-again"), ("D", "first-D")], 100)
-    run_foreach_batch_upsert(spark, src + "/*", schema, sink, ck, ["uid"])
-    got = {r.uid: r.payload for r in spark.read.parquet(sink).collect()}
-    assert got == {
-        "A": "first-A", "B": "first-B", "C": "first-C", "D": "first-D"
-    }
 
 
 def test_foreach_batch_rollup_equals_full_recompute(spark, tmp_path):

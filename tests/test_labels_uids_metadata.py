@@ -1,10 +1,9 @@
 """Unit tests: label repair against the reference's _transform_subset
-semantics (field_info.py:306-377), D8 deterministic uid minting (incl.
-collision resolution), and the S9 metadata registry loader."""
+semantics (field_info.py:306-377) and D8 deterministic uid minting (incl.
+collision resolution)."""
 
 from __future__ import annotations
 
-import json
 import re
 
 import pytest
@@ -17,11 +16,6 @@ from neotree_data_pipeline_kedro_spark.operators.labels import (
 from neotree_data_pipeline_kedro_spark.operators.uids import (
     minted_uid,
     repair_duplicate_uids,
-)
-from neotree_data_pipeline_kedro_spark.sources.metadata import (
-    confidential_keys,
-    load_field_metadata,
-    numeric_ranges,
 )
 
 GENDER = {
@@ -219,136 +213,3 @@ def test_repair_duplicate_uids_collision(spark, case):
         for rid, w in enumerate(want)
     }
     assert out == expected
-
-
-def test_metadata_loader(tmp_path):
-    raw = {
-        "script1": {
-            "Gender": {**GENDER, "confidential": False},
-            "KinCell": {
-                "label": "Kin phone",
-                "type": "text",
-                "confidential": True,
-                "minValue": None,
-            },
-            "BW": {"label": "Birth weight", "type": "number", "minValue": 400,
-                   "maxValue": 6000},
-        }
-    }
-    p = tmp_path / "scripts.json"
-    p.write_text(json.dumps(raw))
-    meta = load_field_metadata(p)
-    assert meta["script1"]["Gender"]["options"][0] == {
-        "value": "M", "valueLabel": "Male",
-    }
-    assert confidential_keys(meta) == {"KinCell"}
-    assert numeric_ranges(meta) == {"BW": (400, 6000)}
-    # fetch path: cache miss writes the cache
-    p2 = tmp_path / "fetched.json"
-    meta2 = load_field_metadata(p2, fetch=lambda: raw)
-    assert p2.exists() and meta2.keys() == meta.keys()
-
-
-# ------------------------------------------ S9 live-fetch leg (round 8)
-def test_fetch_script_metadata_cache_protocol(tmp_path, caplog):
-    """Reference cache semantics (conf/common/scripts.py:116-146) behind
-    an injectable transport: miss -> fetch + process + overwrite cache
-    with the processed pair list; hit (refresh=False) -> no transport
-    call; refresh -> transport called again and cache rewritten;
-    unconfigured/failing transport -> cached registry (or empty)."""
-    import json
-    import logging
-    from collections import OrderedDict
-
-    from neotree_data_pipeline_kedro_spark.sources.metadata import (
-        fetch_script_metadata,
-        load_processed_script,
-        merge_script_data,
-    )
-
-    calls = []
-
-    def fake_transport(payload):
-        def t(url, headers):
-            calls.append((url, headers))
-            return payload
-        return t
-
-    raw_v1 = {
-        "data": [
-            {
-                "screens": [
-                    {
-                        "fields": [
-                            {"key": "BW", "dataType": "number"},
-                            {"key": "BW", "dataType": "IGNORED-dup"},
-                            {"key": "Sex", "dataType": "dropdown"},
-                            {"noKey": True},
-                        ]
-                    }
-                ]
-            }
-        ]
-    }
-
-    # miss -> fetch, process (first occurrence wins), cache written
-    got = fetch_script_metadata(
-        "adm", base_url="http://editor.example", api_key="k",
-        cache_dir=tmp_path, transport=fake_transport(raw_v1),
-    )
-    assert got == OrderedDict(
-        [("BW", {"key": "BW", "dataType": "number"}),
-         ("Sex", {"key": "Sex", "dataType": "dropdown"})]
-    )
-    assert len(calls) == 1
-    url, headers = calls[0]
-    assert url.startswith("http://editor.example/api/scripts/metadata?data=")
-    assert '"scriptsIds": ["adm"]' in url and headers["x-api-key"] == "k"
-    # cache file holds the PROCESSED pair list (the reference overwrites
-    # the raw download with it)
-    on_disk = json.loads((tmp_path / "adm.json").read_text())
-    assert on_disk == [["BW", {"key": "BW", "dataType": "number"}],
-                       ["Sex", {"key": "Sex", "dataType": "dropdown"}]]
-
-    # hit: refresh=False serves the cache without touching the transport
-    got2 = fetch_script_metadata(
-        "adm", base_url="http://editor.example", api_key="k",
-        cache_dir=tmp_path, transport=fake_transport({}), refresh=False,
-    )
-    assert got2 == got and len(calls) == 1
-
-    # refresh: transport consulted again, cache rewritten
-    raw_v2 = {"data": [{"screens": [{"fields": [
-        {"key": "Temp", "dataType": "number"}]}]}]}
-    got3 = fetch_script_metadata(
-        "adm", base_url="http://editor.example", api_key="k",
-        cache_dir=tmp_path, transport=fake_transport(raw_v2),
-    )
-    assert list(got3) == ["Temp"] and len(calls) == 2
-    assert load_processed_script("adm", tmp_path) == got3
-
-    # unconfigured endpoint -> cached registry + warning
-    with caplog.at_level(logging.WARNING):
-        got4 = fetch_script_metadata("adm", cache_dir=tmp_path)
-    assert got4 == got3
-    assert any("endpoint not configured" in r.getMessage() for r in caplog.records)
-
-    # failing transport -> cache fallback (documented divergence from the
-    # reference, which would crash on the missing raw file)
-    def boom(url, headers):
-        raise OSError("connection refused")
-
-    got5 = fetch_script_metadata(
-        "adm", base_url="http://editor.example", api_key="k",
-        cache_dir=tmp_path, transport=boom,
-    )
-    assert got5 == got3
-
-    # unconfigured AND cold cache -> empty registry
-    got6 = fetch_script_metadata("never-fetched", cache_dir=tmp_path)
-    assert got6 == OrderedDict()
-
-    # merge: existing keys win, new keys append in order
-    merged = merge_script_data(got, got3)
-    assert merged == OrderedDict([*got.items(), *got3.items()])
-    assert merge_script_data(None, got3) == got3

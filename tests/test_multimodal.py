@@ -1,5 +1,5 @@
-"""PNG codec + multimodal operators: real byte-level decode/resize/
-frame-sample (functions/png.py, operators/multimodal.py)."""
+"""PNG codec + multimodal operators: real byte-level decode/frame-sample
+(functions/png.py, operators/multimodal.py)."""
 
 from __future__ import annotations
 
@@ -19,11 +19,9 @@ from neotree_data_pipeline_kedro_spark.functions.png import (
     decode_video,
     encode_png,
     encode_video,
-    resize_nearest,
 )
 from neotree_data_pipeline_kedro_spark.operators.multimodal import (
     decode_image,
-    resize_image,
     sample_video_frames,
 )
 
@@ -82,14 +80,6 @@ def test_decode_rejects_junk():
         decode_png(b"not a png at all")
 
 
-def test_resize_nearest_exact():
-    px = np.arange(16, dtype=np.uint8).reshape(4, 4, 1)
-    up = resize_nearest(px, 8, 8)
-    # every source pixel appears in a 2x2 block
-    assert up.shape == (8, 8, 1)
-    assert np.array_equal(up[::2, ::2], px)
-
-
 def _image_df(spark, n=20):
     rows = []
     for i in range(n):
@@ -134,14 +124,6 @@ def test_decode_image_custom_decoder_seam(spark):
     assert len(out) == 20
     for r in out:
         assert r["mean_pixel"] == pytest.approx((r["id"] % 251) * 2 % 256)
-
-
-def test_resize_image_operator(spark):
-    out = resize_image(_image_df(spark), "id", "img", 3, 2).orderBy("id").collect()
-    assert len(out) == 20
-    px = decode_png(bytes(out[5]["png"]))
-    assert px.shape == (2, 3, 3)
-    assert (px == 5 % 251).all()
 
 
 def test_sample_video_frames_operator(spark):

@@ -164,43 +164,6 @@ def test_ann_lsh_soundness_and_recall(spark):
     assert recall >= 0.7, f"recall@10 {recall:.2f} below floor"
 
 
-def test_bucket_lsh_on_clustered_corpus(spark):
-    """Bucketed multi-table LSH (planes=12, tables=16) on data with real
-    cluster structure — the regime it exists for. Planted clusters at
-    cosine ~0.95 to their members; recall of planted neighbors must be high
-    while the candidate fraction stays far below the ~41% an isotropic
-    corpus would need (measured here at < 15%)."""
-    from pyspark.sql import functions as F
-
-    from neotree_data_pipeline_kedro_spark.operators.similarity import (
-        lsh_bucket_topk,
-    )
-
-    rng = np.random.default_rng(7)
-    n_clusters, per, dim = 40, 10, 64
-    centers = rng.standard_normal((n_clusters, dim))
-    rows = []
-    for ci in range(n_clusters):
-        for j in range(per):
-            v = centers[ci] + 0.15 * rng.standard_normal(dim)
-            rows.append((ci * per + j, ci, (v / np.linalg.norm(v)).tolist()))
-    pdf = pd.DataFrame(rows, columns=["vec_id", "cluster", "embedding"])
-    df = spark.createDataFrame(pdf)
-    queries = df.filter(F.col("vec_id") % per == 0)  # one query per cluster
-
-    got = lsh_bucket_topk(
-        df, queries, "vec_id", "embedding", k=per, planes=12, tables=16
-    ).toPandas()
-    # each query's top-k should be dominated by its own planted cluster
-    hits = total = 0
-    for qid, grp in got.groupby("query_id"):
-        want_cluster = qid // per
-        total += per
-        hits += sum(grp.neighbor_id // per == want_cluster)
-    assert total == n_clusters * per
-    assert hits / total >= 0.9, f"clustered recall {hits / total:.2f}"
-
-
 def test_kmeans_fit_matches_numpy_twin(spark):
     """Distributed Lloyd's (kmeans_fit) vs an independent in-memory numpy
     twin run from the same init: centroids must agree to float tolerance,
@@ -642,55 +605,6 @@ def test_ann_ivfpq_soundness_and_recall(spark):
         hits += len(want & got.get(q, set()))
     recall = hits / total
     assert recall >= 0.5, f"IVFPQ recall@10 {recall:.2f} below floor"
-
-
-def test_ann_index_save_load_roundtrip(spark, tmp_path):
-    """Persisted IVFPQ index: search results after save+load must equal
-    the in-memory index's results exactly, and the codes layout must be
-    partitioned by cell (directory pruning for probes)."""
-    import glob as g
-
-    from neotree_data_pipeline_kedro_spark.operators.similarity import (
-        build_ivfpq_index,
-        ivfpq_topk,
-        load_ann_index,
-        pq_train,
-        save_ann_index,
-    )
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    cents = (
-        emb.orderBy(F.xxhash64("vec_id"))
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("centroid_vec"),
-        )
-    )
-    books = pq_train(emb, "vec_id", "embedding", m=8, nbits=4)
-    index = build_ivfpq_index(emb, cents, books, "vec_id", "embedding")
-    q = emb.filter(F.col("vec_id") % 100 == 0)
-
-    before = ivfpq_topk(
-        index, cents, books, emb, q, "vec_id", "embedding", k=5, nprobe=4
-    ).toPandas()
-
-    path = str(tmp_path / "ann")
-    save_ann_index(index, books, cents, path)
-    index2, books2, cents2 = load_ann_index(spark, path)
-    assert np.allclose(books, books2)
-    after = ivfpq_topk(
-        index2, cents2, books2, emb, q, "vec_id", "embedding", k=5, nprobe=4
-    ).toPandas()
-
-    key = ["query_id", "neighbor_id", "cosine_sim"]
-    b = before[key].sort_values(key).reset_index(drop=True)
-    a = after[key].sort_values(key).reset_index(drop=True)
-    assert b.equals(a)
-    assert g.glob(path + "/codes/batch=*/cell=*"), (
-        "codes not partitioned by (batch, cell)"
-    )
 
 
 def test_pagerank_matches_numpy_power_iteration(spark):

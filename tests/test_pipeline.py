@@ -665,6 +665,46 @@ def test_engine_rejects_two_scripts_for_one_table():
         )
 
 
+def test_engine_rejects_renamed_source_key():
+    """tidy renames entry keys (KEY_RENAMES) before it pivots on the
+    configured keys, so a config naming a rename's source key would pivot
+    a column that can never be filled; the Engine refuses it."""
+    msg = r"field_info\['admissions'\] names the key 'BW', which tidy renames to"
+    with pytest.raises(ValueError, match=msg + " 'BirthWeight'"):
+        Engine(
+            EngineConfig(
+                scripts={ADM_SCRIPT: "admissions"},
+                field_info={"admissions": {"BW": {"type": "number"}}},
+            )
+        )
+    msg = r"pivot_keys\['discharges'\] names the key 'BWTDis'"
+    with pytest.raises(ValueError, match=msg):
+        Engine(
+            EngineConfig(
+                scripts={DIS_SCRIPT: "discharges"},
+                pivot_keys={"discharges": ["NeoTreeOutcome", "BWTDis"]},
+            )
+        )
+
+
+def test_cli_keeps_birth_weight(spark, tmp_path):
+    """The CLI's sessions carry birth weight under the old key ``BW``; it
+    reaches the admissions table, the convenience BWGroup and the ALL
+    table."""
+    from conftest import SF_SMOKE
+
+    from neotree_data_pipeline_kedro_spark.__main__ import main
+
+    out = str(tmp_path / "wh")
+    main(argv=["--sf-dir", SF_SMOKE, "--out", out], spark=spark)
+    adm = spark.read.parquet(f"{out}/admissions")
+    assert adm.count() > 0
+    assert adm.filter(F.col("`BirthWeight.value`").isNull()).count() == 0
+    conv = spark.read.parquet(f"{out}/convenience")
+    assert conv.filter(F.col("BWGroup").isNull()).count() == 0
+    assert "BirthWeight.value" in spark.read.parquet(f"{out}/merged_all").columns
+
+
 def test_engine_default_facility_map(spark):
     """Without a facility_map every facility is null and the stages still
     build: the discharge pairs with its admission in the ALL table."""

@@ -102,6 +102,13 @@ def test_no_cartesian_anywhere(spark, name):
     assert "CartesianProduct" not in plan
 
 
+def test_all_lifecycle_is_one_full_outer_join(spark):
+    # one join of the two deduplicated sides, the shape of its oracle SQL
+    plan = plan_of(spark, "sm_all_lifecycle")
+    assert "FullOuter" in plan
+    assert "Union" not in plan and "LeftAnti" not in plan
+
+
 def test_q3_broadcasts_and_takes_ordered(spark):
     plan = plan_of(spark, "q3_shipping_priority")
     assert "BroadcastHashJoin" in plan

@@ -3,16 +3,12 @@
 - topk_join's how='left' NULL-score sentinel is ENFORCED even when the
   caller's score() is coalesce/literal-bearing (previously only rank 1
   and NULL right columns were guaranteed).
-- append_ann_index validates batch_id (it names a partition directory)
-  and rejects URI/non-local paths (os.rename idempotency would silently
-  evaporate).
 - interval_overlap_join accepts column names containing backticks (the
   f-string SQL fragment now escapes them).
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -39,20 +35,6 @@ def test_topk_join_sentinel_survives_coalesce_score(spark):
     )
     matched = out[out["lk"] == 1]
     assert matched["s"].iloc[0] == 10.0
-
-
-def test_append_ann_index_rejects_bad_batch_id_and_uri_path(spark):
-    from neotree_data_pipeline_kedro_spark.operators.similarity import (
-        append_ann_index,
-    )
-
-    delta = spark.createDataFrame([(1, [0.0, 1.0])], "id bigint, v array<double>")
-    for bad in ("a/b", "x=1", "b%2Fc", "", "a b"):
-        with pytest.raises(ValueError, match="batch_id"):
-            append_ann_index(delta, "/tmp/nope", "id", "v", batch_id=bad)
-    for bad_path in ("file:/tmp/x", "s3a://bucket/x", "hdfs://nn/x"):
-        with pytest.raises(ValueError, match="path"):
-            append_ann_index(delta, bad_path, "id", "v", batch_id="b1")
 
 
 def test_interval_overlap_join_backtick_column_names(spark):

@@ -1,188 +1,7 @@
-"""Round-12 compositions (VERDICT r11 #7): the streaming corpus build
-feeding ANN index maintenance in the SAME foreachBatch — each batch's
-kept documents land in the corpus AND become searchable, with every leg
-staged-rename idempotent on the same file-set batch id so crash/replay
-seams cannot double-land rows in corpus, census, codes, or vectors."""
+"""Round-12 guard: set_similarity_join's partition normalization leaves
+its output unchanged."""
 
 from __future__ import annotations
-
-import pytest
-
-import json
-import os
-
-from pyspark.sql import functions as F
-
-ANN_SCHEMA = (
-    "doc_id bigint, text string, source string, lang string, "
-    "embedding array<double>"
-)
-
-
-def _write(spark, path, rows):
-    spark.createDataFrame(rows, ANN_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-@pytest.mark.slow  # r13: heavy tail, builder-run via -m slow
-def test_streaming_corpus_build_maintains_ann_index(spark, tmp_path):
-    from neotree_data_pipeline_kedro_spark.operators.similarity import (
-        build_ivfpq_index,
-        ivfpq_topk,
-        load_ann_index,
-        pq_train,
-        save_ann_index,
-    )
-    from neotree_data_pipeline_kedro_spark.streaming.incremental import (
-        corpus_build_conservation,
-        run_foreach_batch_corpus_build,
-    )
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).select(F.col("vec_id").alias("id"), "embedding")
-    base = emb.filter(F.col("id") % 5 != 0)
-    fresh = [
-        [float(x) for x in r["embedding"]]
-        for r in emb.filter(F.col("id") % 5 == 0).limit(4).collect()
-    ]
-    cents = (
-        emb.orderBy(F.xxhash64("id"))
-        .limit(8)
-        .select(
-            F.col("id").alias("centroid_id"),
-            F.col("embedding").alias("centroid_vec"),
-        )
-    )
-    books = pq_train(emb, "id", "embedding", m=8, nbits=4)
-    index = build_ivfpq_index(base, cents, books, "id", "embedding")
-    path = str(tmp_path / "ann")
-    save_ann_index(
-        index, books, cents, path, vectors=base.select("id", "embedding")
-    )
-    n_base = base.count()
-
-    good = "the quick brown fox jumps over the lazy dog tonight"
-    src = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    # planted ids >= 1e9, the fixture discipline
-    _write(
-        spark,
-        src + "/f1.parquet",
-        [
-            (1_000_000_001, good, "web", "en", fresh[0]),  # kept
-            (1_000_000_002, None, "web", "en", fresh[1]),  # quarantined
-            (1_000_000_003, "too short", "web", "en", fresh[1]),  # gated
-            (1_000_000_004, good, "crawl", "en", fresh[1]),  # dup_in_batch
-        ],
-    )
-    _write(
-        spark,
-        src + "/f2.parquet",
-        [
-            (
-                1_000_000_005,
-                "seven brand new tokens arrive in this doc",
-                "web",
-                "en",
-                fresh[2],
-            ),  # kept
-            (1_000_000_006, good, "crawl", "en", fresh[3]),  # dup_cross_batch
-        ],
-    )
-    run_foreach_batch_corpus_build(
-        spark,
-        src + "/*",
-        ANN_SCHEMA,
-        out,
-        str(tmp_path / "ck"),
-        ann_path=path,
-    )
-
-    # only the two KEPT docs' vectors entered the index
-    assert spark.read.parquet(path + "/codes").count() == n_base + 2
-    assert spark.read.parquet(path + "/vectors").count() == n_base + 2
-    reports = sorted(os.listdir(path + "/maintenance"))
-    assert len(reports) == 2
-    for rp in reports:
-        with open(os.path.join(path, "maintenance", rp)) as fh:
-            rep = json.load(fh)
-        assert rep["appended"] == 1
-        assert rep["retrain"] is False
-
-    audit = corpus_build_conservation(spark, out)
-    assert audit["holds"], audit
-    assert audit["corpus_rows"] == 2
-    assert audit["landing_rows"] == 6
-
-    # checkpoint RELOCATION replay: a fresh checkpoint re-delivers every
-    # file; nothing double-lands in corpus, census, codes, or vectors
-    run_foreach_batch_corpus_build(
-        spark,
-        src + "/*",
-        ANN_SCHEMA,
-        out,
-        str(tmp_path / "ck2"),
-        ann_path=path,
-    )
-    assert spark.read.parquet(path + "/codes").count() == n_base + 2
-    assert spark.read.parquet(path + "/vectors").count() == n_base + 2
-    assert corpus_build_conservation(spark, out) == audit
-    assert len(os.listdir(path + "/maintenance")) == 2
-
-    # the maintained index answers ivfpq_topk EXACTLY like a
-    # from-scratch build over the final corpus (base + both kept docs)
-    # under the same frozen quantizers
-    idx_m, books_m, cents_m = load_ann_index(spark, path)
-    vecs = spark.read.parquet(path + "/vectors").select("id", "embedding")
-    idx_s = build_ivfpq_index(vecs, cents_m, books_m, "id", "embedding")
-    q = emb.limit(3)
-    kw = dict(k=3, nprobe=4)
-    got = (
-        ivfpq_topk(idx_m, cents_m, books_m, vecs, q, "id", "embedding", **kw)
-        .toPandas()
-        .sort_values(["query_id", "neighbor_id"])
-        .reset_index(drop=True)
-    )
-    want = (
-        ivfpq_topk(idx_s, cents_m, books_m, vecs, q, "id", "embedding", **kw)
-        .toPandas()
-        .sort_values(["query_id", "neighbor_id"])
-        .reset_index(drop=True)
-    )
-    assert got.equals(want), (got, want)
-    # ...and the streamed docs are actually FINDABLE: querying with a
-    # kept doc's own vector returns that doc as its top neighbor
-    qk = spark.createDataFrame(
-        [(1_000_000_001, fresh[0])], "id bigint, embedding array<double>"
-    )
-    top = (
-        ivfpq_topk(idx_m, cents_m, books_m, vecs, qk, "id", "embedding", **kw)
-        .orderBy(F.desc("cosine_sim"))
-        .first()
-    )
-    assert top["neighbor_id"] == 1_000_000_001
-
-
-def test_streaming_corpus_build_ann_rejects_remote_index_path(
-    spark, tmp_path
-):
-    import pytest as _pytest
-
-    from neotree_data_pipeline_kedro_spark.streaming.incremental import (
-        run_foreach_batch_corpus_build,
-    )
-
-    with _pytest.raises(ValueError, match="local-filesystem"):
-        run_foreach_batch_corpus_build(
-            spark,
-            str(tmp_path / "in"),
-            ANN_SCHEMA,
-            str(tmp_path / "out"),
-            str(tmp_path / "ck"),
-            ann_path="s3a://bucket/ann",
-        )
 
 
 def test_ppjoin_partition_normalization_identical_output(spark):

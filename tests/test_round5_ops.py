@@ -915,15 +915,11 @@ def test_nullsafe_join_matches_null_keys(spark):
 
 # ------------------------------------------- dynamic partition pruning (DPP)
 def test_dynamic_partition_pruning_fires(spark, tmp_path):
-    from neotree_data_pipeline_kedro_spark.sources.warehouse import (
-        write_partitioned,
-    )
-
     fact_dir = str(tmp_path / "fact_part")
     fact = spark.range(0, 20000).select(
         F.col("id").alias("k"), (F.col("id") % 12).alias("part")
     )
-    write_partitioned(fact, fact_dir, ["part"])
+    fact.write.partitionBy("part").parquet(fact_dir)
     dim = spark.range(0, 12).select(
         F.col("id").alias("part"), (F.col("id") % 2 == 0).alias("keep")
     )

@@ -247,69 +247,6 @@ def test_multipass_blocking_recall_union(spark):
     assert pairs == {(1, 2), (1, 3)}
 
 
-# --------------------------------------------- incremental ANN append
-@pytest.mark.slow  # r13: heavy tail, builder-run via -m slow
-def test_ann_index_append_delta_searchable(spark, tmp_path):
-    """append_ann_index: delta vectors encoded against the FROZEN
-    quantizers land in the cell-partitioned codes dir and are
-    immediately searchable; existing entries are untouched."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from neotree_data_pipeline_kedro_spark.operators.similarity import (
-        append_ann_index,
-        build_ivfpq_index,
-        ivfpq_topk,
-        load_ann_index,
-        pq_train,
-        save_ann_index,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    base = emb.filter(F.col("vec_id") % 10 != 0)
-    delta = emb.filter(F.col("vec_id") % 10 == 0)
-    cents = (
-        emb.orderBy(F.xxhash64("vec_id"))
-        .limit(8)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("centroid_vec"),
-        )
-    )
-    books = pq_train(emb, "vec_id", "embedding", m=8, nbits=4)
-    index = build_ivfpq_index(base, cents, books, "vec_id", "embedding")
-    path = str(tmp_path / "ann")
-    save_ann_index(index, books, cents, path)
-    n_before = spark.read.parquet(path + "/codes").count()
-
-    report = append_ann_index(delta, path, "vec_id", "embedding",
-                              batch_id="b1")
-    n_delta = delta.count()
-    skew1 = {r["cell"]: r["n_appended"] for r in report.collect()}
-    assert sum(skew1.values()) == n_delta
-    idx2, books2, cents2 = load_ann_index(spark, path)
-    assert idx2.count() == n_before + n_delta
-    assert np.allclose(books, books2)
-
-    # re-run safety: the SAME batch retried is a no-op — the published
-    # batch=b1 directory short-circuits the write, so codes count and
-    # the skew report are unchanged (no row lands twice)
-    report2 = append_ann_index(delta, path, "vec_id", "embedding",
-                               batch_id="b1")
-    assert {r["cell"]: r["n_appended"] for r in report2.collect()} == skew1
-    assert spark.read.parquet(path + "/codes").count() == n_before + n_delta
-
-    # a delta vector queried against the appended index must retrieve
-    # itself (cosine 1.0 lives in the probed cell by construction)
-    q = delta.limit(3)
-    hits = ivfpq_topk(
-        idx2, cents2, books2, emb, q, "vec_id", "embedding", k=3, nprobe=8
-    ).toPandas()
-    for qid in [r["vec_id"] for r in q.collect()]:
-        mine = hits[hits["query_id"] == qid]["neighbor_id"].tolist()
-        assert qid in mine, (qid, mine)
-
-
 # --------------------------------------------- incremental components
 @pytest.mark.slow  # r13: heavy tail, builder-run via -m slow
 def test_incremental_components_matches_batch(spark):

@@ -1,4 +1,4 @@
-"""Full-text search operators: postings/TF-IDF vs a driver-side counter,
+"""Full-text search operators: postings vs a driver-side counter,
 BM25 ranking sanity, and the top-k plan contract."""
 
 from __future__ import annotations
@@ -12,7 +12,6 @@ from neotree_data_pipeline_kedro_spark.operators.search import (
     bm25_topk,
     doc_lengths,
     postings,
-    tfidf_vectors,
 )
 
 DOCS = [
@@ -44,14 +43,6 @@ def test_postings_match_counter(spark):
 def test_doc_lengths(spark):
     got = {r["id"]: r["dl"] for r in doc_lengths(_df(spark), "doc_id", "text").collect()}
     assert got == {1: 4, 2: 3, 3: 4, 4: 0, 5: 7, 6: 0}
-
-
-def test_tfidf_formula(spark):
-    rows = tfidf_vectors(_df(spark), "doc_id", "text").collect()
-    by = {(r["term"], r["id"]): r for r in rows}
-    r = by[("join", 1)]
-    assert r["tf"] == 3 and r["df"] == 2
-    assert math.isclose(r["tfidf"], 3 * math.log(6 / 2), rel_tol=1e-12)
 
 
 def test_bm25_ranks_matching_docs_first(spark):

@@ -1,7 +1,7 @@
 """Fixture tests for the session/JSON layer (sources/sessions.py) — the
 edge cases the events-synthesized oracle queries don't reach: empty values
 lists, uid repair priority, dropped repeatable entries, scalar-vs-dict
-repeatable fields, drugs/fluids flags, appVersion digit extraction."""
+repeatable fields, drugs/fluids flags."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ import json
 from pyspark.sql import functions as F
 
 from neotree_data_pipeline_kedro_spark.sources.sessions import (
-    app_version_number,
     entry_rows,
     explode_list_section,
     explode_mcl,
@@ -162,47 +161,9 @@ def test_explode_diagnoses_and_drugs(spark):
         extra={
             "is_drug": F.lit(True),
             "is_fluid": F.lit(False),
-            "app_version": app_version_number(F.col("appVersion")),
         },
     ).collect()
     assert len(drugs) == 1
     d = drugs[0]
-    assert (d.value, d.is_drug, d.is_fluid, d.app_version) == (
-        "Ampicillin", True, False, 501,
-    )
+    assert (d.value, d.is_drug, d.is_fluid) == ("Ampicillin", True, False)
     assert d.fields["dose"] == "50mg"
-
-
-def test_scan_quarantine_accounts_for_every_input(spark, tmp_path):
-    from neotree_data_pipeline_kedro_spark.sources.sessions import (
-        read_session_files,
-        scan_quarantine,
-    )
-
-    good = {
-        "sessions": [
-            json.dumps(
-                {"uid": "ok-1", "script": {"id": "s1"}, "started_at": "2024-01-01"}
-            ),
-            json.dumps({"uid": None, "script": {"id": "s1"}, "entries": []}),  # no uid
-            json.dumps({"uid": "ok-2", "script": {}}),  # no script id
-        ]
-    }
-    (tmp_path / "good.json").write_text(json.dumps(good))
-    (tmp_path / "truncated.json").write_text('{"sessions": [ {"uid": "x"')
-    (tmp_path / "wrong_shape.json").write_text(json.dumps({"data": []}))
-
-    glob = str(tmp_path / "*.json")
-    parsed = read_session_files(spark, glob)
-    quarantined = scan_quarantine(spark, glob)
-
-    q = [(r.src_file.rsplit("/", 1)[-1], r.session_pos, r.reason)
-         for r in quarantined.collect()]
-    assert ("truncated.json", None, "invalid_json") in q
-    assert ("wrong_shape.json", None, "no_sessions_array") in q
-    assert ("good.json", 1, "unrecoverable_uid") in q
-    assert ("good.json", 2, "missing_scriptid") in q
-    # conservation: parsed + session-level quarantine = exploded sessions
-    session_level = [r for r in q if r[1] is not None]
-    assert parsed.count() + len(session_level) == 3
-    assert {r.uid for r in parsed.collect()} == {"OK-1"}  # repair_uid uppercases

@@ -1,29 +1,10 @@
-"""Landing-zone robustness: schema evolution across parquet batches and
-stream-static broadcast enrichment."""
+"""Landing-zone robustness: stream-static broadcast enrichment and a
+watermarked stream-stream join."""
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-
-from neotree_data_pipeline_kedro_spark.sources.tables import load_evolving
-
-
-def test_schema_evolution_merges_batches(spark, tmp_path):
-    base = str(tmp_path / "landing")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id bigint, name string"
-    ).write.parquet(base + "/batch=0")
-    spark.createDataFrame(
-        [(3, "c", 9.5)], "id bigint, name string, score double"
-    ).write.parquet(base + "/batch=1")
-
-    df = load_evolving(spark, base)
-    assert {f.name for f in df.schema} >= {"id", "name", "score"}
-    rows = {r.id: r for r in df.collect()}
-    assert rows[1].score is None and rows[3].score == 9.5
-    # pruning still applies: selecting only old columns reads fine
-    assert {r.id for r in df.select("id").collect()} == {1, 2, 3}
 
 
 def test_stream_static_broadcast_enrichment(spark, tmp_path):

@@ -8,9 +8,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
-
-from neotree_data_pipeline_kedro_spark.operators.sinks import cascade_delete_keys
 from neotree_data_pipeline_kedro_spark.sources.warehouse import (
     compact_parquet,
     read_snapshot,
@@ -20,26 +17,7 @@ from neotree_data_pipeline_kedro_spark.sources.warehouse import (
 )
 
 
-def _compact(spark, wh, table):
-    compact_parquet(spark, os.path.join(wh, table), target_file_mb=1)
-
-
-def _purge_listed(spark, wh, table):
-    # the warehouse listing must name the recovered table, not its sibling
-    doomed = spark.createDataFrame([(99,)], "uid int")  # absent key
-    assert cascade_delete_keys(spark, wh, doomed, "uid") == {table: 0}
-
-
-def _purge_named(spark, wh, table):
-    doomed = spark.createDataFrame([(99,)], "uid int")
-    assert cascade_delete_keys(spark, wh, doomed, "uid", [table]) == {table: 0}
-
-
-@pytest.mark.parametrize(
-    "replace", [_compact, _purge_listed, _purge_named],
-    ids=["compact_parquet", "cascade_delete_keys", "cascade_delete_keys_named"],
-)
-def test_replace_recovers_dangling_swap(spark, tmp_path, replace):
+def test_compaction_recovers_dangling_swap(spark, tmp_path):
     wh = str(tmp_path / "wh")
     live = os.path.join(wh, "users")
     rows = [(i, f"u{i}") for i in range(20)]
@@ -48,7 +26,7 @@ def test_replace_recovers_dangling_swap(spark, tmp_path, replace):
     # simulate the mid-swap crash + a stale tmp leftover
     os.rename(live, live + ".__rollup_old")
     os.makedirs(live + ".__rollup_tmp")
-    replace(spark, wh, "users")
+    compact_parquet(spark, live, target_file_mb=1)
 
     got = sorted(tuple(r) for r in spark.read.parquet(live).collect())
     assert got == rows

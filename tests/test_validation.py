@@ -131,14 +131,12 @@ def test_oracle_parity_smoke(spark, duck):
         )
 
 
-def test_value_label_mismatches_rows(spark):
-    """Row-level value↔label consistency (validate.py:566-609): mismatched
-    rows carry (uid, base_key, value, actual_label, expected_label);
-    case-insensitive matches, empty/unknown values, absent columns and
-    non-select fields are all skipped."""
+def test_value_label_consistency_counts(spark):
+    """Value↔label consistency (validate.py:566-609): case-insensitive
+    matches, empty/unknown values, absent columns and non-select fields
+    are all skipped."""
     from neotree_data_pipeline_kedro_spark.operators.validation import (
         value_label_consistency,
-        value_label_mismatches,
     )
 
     df = spark.createDataFrame(
@@ -164,21 +162,11 @@ def test_value_label_mismatches_rows(spark):
         {"key": "Gone", "fieldType": "dropdown",
          "options": [{"value": "a", "valueLabel": "A"}]},  # absent column
     ]
-    rows = {r.uid: r for r in value_label_mismatches(df, fields).collect()}
     # u2: 'high' != 'Medium'; u6: 'LOW' != 'High'. u1 exact, u3 unknown value,
     # u4 empty value, u5 null value are all skipped.
-    assert set(rows) == {"u2", "u6"}
-    assert rows["u2"].expected_label == "Medium"
-    assert rows["u2"].actual_label == "high"
-    assert rows["u6"].base_key == "Sev"
-
     agg = value_label_consistency(df, fields).collect()
     assert len(agg) == 1
     assert (agg[0].base_key, agg[0].mismatch_count, agg[0].checked_count) == ("Sev", 2, 3)
-
-    # no applicable fields → typed empty frame
-    empty = value_label_mismatches(df, [{"key": "Sev", "fieldType": "text"}])
-    assert empty.count() == 0
 
 
 def test_column_profile_accuracy(spark):

@@ -112,28 +112,6 @@ def test_cli_out_plus_bucketing_writes_both(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_partitioned_write_prunes_directories(spark, tmp_path):
-    from neotree_data_pipeline_kedro_spark.sources.warehouse import (
-        write_partitioned,
-    )
-
-    df = spark.range(0, 1000).select(
-        F.col("id"),
-        F.concat(F.lit("2024-0"), (F.col("id") % 3 + 1).cast("string")).alias("month"),
-    )
-    path = str(tmp_path / "part_tbl")
-    write_partitioned(df, path, ["month"])
-
-    back = spark.read.parquet(path).filter(F.col("month") == "2024-02")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        back.explain("formatted")
-    plan = buf.getvalue()
-    m = __import__("re").search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "month" in m.group(1), "partition predicate did not prune"
-    assert back.count() == sum(1 for i in range(1000) if i % 3 + 1 == 2)
-
-
 def test_single_bucketed_side_still_prunes_one_exchange(spark, bucketed):
     adm, _ = bucketed
     plain = spark.range(0, 5000, 5).select(F.col("id").alias("uid"))
@@ -165,38 +143,6 @@ def test_compact_parquet_reduces_files_and_preserves_rows(spark, tmp_path):
     back = spark.read.parquet(path)
     assert back.count() == 10_000
     assert back.agg(F.sum("id")).collect()[0][0] == 10_000 * 9_999 // 2
-
-
-def test_dynamic_partition_overwrite_replaces_only_touched(spark, tmp_path):
-    """Reloading one day replaces that day's directory and leaves the
-    other partitions byte-identical; static overwrite would truncate."""
-    from neotree_data_pipeline_kedro_spark.sources.warehouse import (
-        overwrite_partitions,
-    )
-
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(1, "2024-01-01", 10.0), (2, "2024-01-02", 20.0), (3, "2024-01-03", 30.0)],
-        "id bigint, day string, v double",
-    )
-    overwrite_partitions(base, path, ["day"])
-    fix = spark.createDataFrame(
-        [(2, "2024-01-02", 99.0)], "id bigint, day string, v double"
-    )
-    overwrite_partitions(fix, path, ["day"])
-    # partition values come back type-inferred (DATE here) — compare as str
-    got = {
-        (str(r["day"]), r["id"]): r["v"]
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got == {
-        ("2024-01-01", 1): 10.0,
-        ("2024-01-02", 2): 99.0,
-        ("2024-01-03", 3): 30.0,
-    }
-    # idempotent reload: same batch again converges to the same rows
-    overwrite_partitions(fix, path, ["day"])
-    assert spark.read.parquet(path).count() == 3
 
 
 # ---------------------------------------------------------------- snapshots
