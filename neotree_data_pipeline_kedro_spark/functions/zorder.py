@@ -3,14 +3,13 @@
 A single-column sort makes parquet min/max statistics selective on ONE
 column; scans filtering the other columns still read everything. The
 Morton code interleaves the bits of two key columns so that sorting by
-the code clusters rows that are close in BOTH dimensions — after
-compaction each file covers a small rectangle of (x, y) space and a scan
+the code clusters rows that are close in BOTH dimensions — files written
+in code order each cover a small rectangle of (x, y) space, and a scan
 filtering either column prunes most files (the Delta/Iceberg OPTIMIZE
-ZORDER layout, built here from plain Spark expressions).
+ZORDER sort key, built here from plain Spark expressions).
 
 Everything is JVM-side integer bit arithmetic (shiftleft / AND / OR in
-whole-stage codegen) — no UDF, no shuffle of its own; the code column
-rides whatever repartitionByRange the writer already does.
+whole-stage codegen) — no UDF, no shuffle of its own.
 """
 
 from __future__ import annotations
@@ -60,37 +59,3 @@ def morton2_py(x: int, y: int) -> int:
 
     return spread(x) | (spread(y) << 1)
 
-
-def morton2_scaled(
-    x: Column,
-    y: Column,
-    x_min: float,
-    x_max: float,
-    y_min: float,
-    y_max: float,
-    bits: int = 20,
-) -> Column:
-    """Morton code after scaling each dimension onto the same ``bits``-wide
-    integer range. Raw interleaving only balances dimensions of comparable
-    magnitude — a 7-bit key interleaved with an 11-bit key sorts almost
-    entirely by the wider key's high bits and the narrow column gets no
-    clustering. Scaling to a common width (min/max linear map — one tiny
-    agg pass to obtain the bounds, no global sort) restores the
-    alternating-bit property for any value ranges; for heavily skewed
-    columns substitute quantile-bucket ids for the linear map upstream.
-    """
-    top = (1 << bits) - 1
-
-    def scale(c: Column, lo: float, hi: float) -> Column:
-        if hi <= lo:
-            return F.lit(0).cast("long")
-        return F.least(
-            F.lit(top).cast("long"),
-            F.greatest(
-                F.lit(0).cast("long"),
-                ((c.cast("double") - F.lit(float(lo)))
-                 / F.lit(float(hi - lo)) * F.lit(float(top))).cast("long"),
-            ),
-        )
-
-    return morton2(scale(x, x_min, x_max), scale(y, y_min, y_max))

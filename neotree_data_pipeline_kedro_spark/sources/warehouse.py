@@ -1,19 +1,18 @@
-"""Bucketed warehouse writes: co-located joins without runtime shuffles.
+"""Warehouse storage helpers: the directory swap, the snapshot store,
+file-level min/max pruning, format round-trips and compaction planning.
 
-The reference leans on Postgres B-tree indexes for its hot join keys
-(create_joined_table_and_derived_columns.py:130-155;
-merge_all.py:537-588). The Spark-native counterpart is bucketing: write
-both sides of a recurring join bucketed (and optionally sorted) by the
-join key, and every subsequent join on that key reads bucket-aligned
-files — no Exchange on either side, the single biggest shuffle saving for
-the admission↔discharge / uid-keyed join family at 100 TB. The contract
-is pinned in tests/test_warehouse_bucketing.py: a MERGE-hinted join of
-two co-bucketed tables plans with zero exchanges.
-
-Use for the stable silver/gold tables the engine re-joins every cron
-cycle (deduplicated sessions, admissions/discharges, the ALL table);
-one-shot intermediates should stay plain parquet (bucketing costs a
-shuffle at write time).
+- The crash-safe directory swap (``_swap_paths`` / ``_recover_swap`` /
+  ``_publish_swap``) is the package's one way to replace a directory in
+  place; the streaming rollup state goes through it.
+- The snapshot store (``write_snapshot`` ... ``write_audit_publish``) keeps
+  immutable ``v=N`` versions behind one ``_LATEST`` pointer, the
+  write-audit-publish pattern of Iceberg.
+- ``file_minmax_stats`` / ``minmax_prune_scan`` skip the files whose
+  min/max range misses a predicate, the way a lakehouse manifest does.
+- ``roundtrip_format`` writes a frame through ORC (or another columnar
+  format) and reads it back.
+- ``compaction_bins`` plans an order-preserving compaction: contiguous
+  runs of files packed into bins of a target size.
 """
 
 from __future__ import annotations
@@ -27,35 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    keys: Sequence[str],
-    buckets: int = 64,
-    sort_by: Sequence[str] | None = None,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Save ``df`` as a managed table bucketed by ``keys`` into
-    ``buckets`` files per partition (sorted within buckets when
-    ``sort_by`` is given, which also removes the Sort under sort-merge
-    joins). Bucket count is a durable layout choice: both sides of a
-    co-located join must use the same keys and count."""
-    w = df.write.format(fmt).mode(mode).bucketBy(int(buckets), *keys)
-    if sort_by:
-        w = w.sortBy(*sort_by)
-    w.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    """Read a managed table back (bucketing metadata applies
-    automatically; no option needed)."""
-    return spark.table(table)
-
-
 # ------------------------------------------------------------------ swap
-# The package's one way to replace a directory in place (compaction and
-# the streaming rollup state): write the new contents to the
+# The package's one way to replace a directory in place (the streaming
+# rollup state): write the new contents to the
 # ``<live>.__rollup_tmp`` sibling, then (live -> ``.__rollup_old``) ->
 # (tmp -> live) -> rm old. A crash at any point leaves the live dir or its
 # old sibling on disk, never neither; every caller runs ``_recover_swap``
@@ -93,84 +66,6 @@ def _publish_swap(live: str) -> None:
         shutil.rmtree(old)
     else:
         os.rename(tmp, live)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 128,
-    sort_within_by: Sequence[str] | None = None,
-    zorder_by: tuple[str, str] | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet location into
-    ~``target_file_mb`` files — the maintenance job every long-lived
-    landing zone needs (streaming/incremental appends accrete thousands of
-    tiny files; each costs a task + a footer read + NameNode/S3 metadata,
-    and row-group-level pruning stops working).
-
-    File count = ceil(total_bytes / target), measured from the existing
-    footprint, so the rewrite is one job with no driver-side data.
-    ``sort_within_by`` range-partitions on its columns and sorts within
-    each output file (one range shuffle — the compaction already moves
-    every row once, so clustering rides the same pass) so min/max file
-    and row-group statistics on those columns become selective and scans
-    with matching filters skip whole files.
-    ``zorder_by=(x_col, y_col)`` clusters files on the Morton interleave
-    of two integer key columns (functions/zorder.py): rows are
-    range-partitioned AND sorted by the code, so each output file covers
-    a small rectangle of (x, y) space and scans filtering EITHER column
-    skip most files — the two-dimensional layout a single-column sort
-    cannot give. ``sort_within_by`` alone also now range-partitions on
-    its first column (global clustering: non-overlapping file ranges,
-    not just row-group-sorted files).
-
-    The rewrite replaces ``path`` through the directory swap
-    (``_publish_swap``): readers never see a half-written file set (they
-    can race the brief window between renames and retry; on object
-    stores, prefer a manifest/catalog pointer flip instead), and a swap
-    interrupted by a crash is recovered before the footprint is measured.
-    Returns the new file count.
-    """
-    _recover_swap(path)
-    total = 0
-    for root, _, names in os.walk(path):
-        for n in names:
-            if n.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, n))
-    n_files = max(1, -(-total // (target_file_mb << 20)))
-    df = spark.read.parquet(path)
-    if zorder_by is not None:
-        from ..functions.zorder import morton2_scaled
-
-        x_col, y_col = zorder_by
-        # one tiny agg for the bounds (4 scalars to the driver — this is a
-        # maintenance job, not the scan path): scaling both dimensions to a
-        # common bit-width is what makes the interleave balanced when the
-        # keys' ranges differ (raw bits would sort by the wider key alone)
-        lo_x, hi_x, lo_y, hi_y = df.agg(
-            F.min(x_col), F.max(x_col), F.min(y_col), F.max(y_col)
-        ).first()
-        df = (
-            df.withColumn(
-                "__zcode",
-                morton2_scaled(
-                    F.col(x_col), F.col(y_col),
-                    float(lo_x), float(hi_x), float(lo_y), float(hi_y),
-                ),
-            )
-            .repartitionByRange(n_files, "__zcode")
-            .sortWithinPartitions("__zcode")
-            .drop("__zcode")
-        )
-    elif sort_within_by:
-        df = df.repartitionByRange(
-            n_files, *[F.col(c) for c in sort_within_by]
-        ).sortWithinPartitions(*sort_within_by)
-    else:
-        df = df.repartition(n_files)
-    df.write.mode("overwrite").parquet(_swap_paths(path)[0])
-    _publish_swap(path)
-    return n_files
 
 
 def roundtrip_format(df: DataFrame, path: str, fmt: str = "orc") -> DataFrame:
@@ -213,10 +108,10 @@ def minmax_prune_scan(
 ) -> tuple[DataFrame, int, int]:
     """Scan ``table_dir`` for rows with ``col`` in [lo, hi], reading ONLY
     the files whose min/max range intersects the predicate — data
-    skipping via a manifest, the mechanism that makes Z-order/sort
-    clustering (functions/zorder.py, compact_parquet) pay off: after
-    clustering, most files' ranges are disjoint from most predicates and
-    never leave the object store.
+    skipping via a manifest, the mechanism that makes sort or Z-order
+    clustering (functions/zorder.py) pay off: after clustering, most
+    files' ranges are disjoint from most predicates and never leave the
+    object store.
 
     Returns (dataframe, files_read, files_total). The residual filter is
     still applied (file granularity over-approximates); correctness

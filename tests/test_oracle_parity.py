@@ -81,3 +81,44 @@ def test_rows_only_queries_run(spark, name):
     n = df.count()
     assert n >= 0
     df.limit(5).collect()
+
+
+def test_sm_all_lifecycle_null_uid_keeps_its_side(spark, tmp_path):
+    """A signup and a purchase with a null ``user_id`` never match each
+    other: each stays one-sided, the signup an open admission and the
+    purchase an unmatched discharge, in Spark and in the oracle alike."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.oracle_check import canon_hash
+
+    events = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    top = pa.compute.max(events["event_id"]).as_py()
+    extra = pa.Table.from_pylist(
+        [
+            {"event_id": top + 1, "ts": datetime.datetime(2024, 3, 1, 9, 0),
+             "user_id": None, "event_type": "signup", "value": 1.0, "props": None},
+            {"event_id": top + 2, "ts": datetime.datetime(2024, 3, 2, 9, 0),
+             "user_id": None, "event_type": "purchase", "value": 2.0, "props": None},
+        ],
+        schema=events.schema,
+    )
+    pq.write_table(pa.concat_tables([events, extra]), tmp_path / "events.parquet")
+
+    got = QUERIES["sm_all_lifecycle"](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM "
+            f"read_parquet('{tmp_path / 'events.parquet'}')"
+        )
+        want = con.execute(ORACLE_SQL["sm_all_lifecycle"]).fetchdf()
+    finally:
+        con.close()
+    null_rows = got[got["uid"].isna()]
+    assert sorted(null_rows["match_status"]) == [
+        "unmatched_admission", "unmatched_discharge"]
+    assert len(got) == len(want)
+    assert sorted(got.columns) == sorted(want.columns)
+    assert canon_hash(got) == canon_hash(want)

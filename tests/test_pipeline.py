@@ -9,6 +9,7 @@ import re
 import sys
 import threading
 import time
+import types
 
 import pytest
 from pyspark.sql import functions as F
@@ -616,16 +617,78 @@ def test_engine_stage_error_stops_downstream(spark):
     assert not any(t.is_alive() for t in threads if t is not me)
 
 
-def test_cli_main_runs_all_stages(spark):
+@pytest.fixture(scope="module")
+def cli_run(spark, tmp_path_factory):
+    """One ``main`` run on the seed-0 benchmark landing: the product pass
+    that writes the warehouse, the bronze sink and the rollup."""
+    from perfbench import gen, workloads
+
     from neotree_data_pipeline_kedro_spark.__main__ import main
 
-    counts = main(argv=["--sf-dir", "/root/testdata/sf0.001"], spark=spark)
-    assert counts["bronze"] == 1000
-    assert set(counts) >= {
-        "bronze", "deduplicated", "admissions", "discharges", "joined",
-        "convenience", "summary_counts", "clean_admissions", "merged_all",
-    }
-    assert all(n >= 0 for n in counts.values())
+    tmp = tmp_path_factory.mktemp("cli")
+    batch = gen.backfill(0, workloads.BACKFILL_ADMISSIONS, workloads.BACKFILL_FILES)
+    gen.write_batch(batch, str(tmp / "landing"))
+    scripts = {gen.ADM_SCRIPT: "admissions", gen.DIS_SCRIPT: "discharges"}
+    (tmp / "engine.json").write_text(json.dumps({
+        "scripts": scripts,
+        "facility_map": {s: gen.FACILITY for s in scripts},
+        "field_info": gen.FIELD_INFO,
+    }))
+    out = tmp / "out"
+    argv = ["--landing", str(tmp / "landing" / "*.json"), "--out", str(out),
+            "--config", str(tmp / "engine.json")]
+    first = main(argv, spark=spark)
+
+    def wh(name):
+        return spark.read.parquet(str(out / "warehouse" / name))
+
+    return types.SimpleNamespace(batch=batch, out=out, argv=argv, first=first, wh=wh)
+
+
+def test_cli_main_runs_all_stages(spark, cli_run):
+    """``main`` is the product pass: the warehouse, the bronze sink and the
+    rollup hold every conservation identity and the pinned checksums, and a
+    second run into the same ``--out`` appends nothing and changes no table."""
+    from perfbench import workloads
+
+    from neotree_data_pipeline_kedro_spark.__main__ import main
+
+    batch, wh = cli_run.batch, cli_run.wh
+
+    def check_etl():
+        failures = []
+        workloads.check_etl(
+            types.SimpleNamespace(spark=spark, fail=lambda *f: failures.append(f)),
+            0, str(cli_run.out), batch, F,
+        )
+        assert failures == []
+
+    first = dict(cli_run.first)
+    assert first.pop("bronze_sink") == len(batch.keys)
+    assert first["bronze"] == batch.sessions
+    assert first["deduplicated"] == len(batch.keys)
+    # the rows observed inside each write are the rows written
+    assert first == {name: wh(name).count() for name in first}
+    # the sink has the deduplicated stage's schema, which the rollup declares
+    assert (spark.read.parquet(str(cli_run.out / "bronze_sink")).schema
+            == wh("deduplicated").schema)
+    check_etl()
+
+    again = main(cli_run.argv, spark=spark)
+    assert again.pop("bronze_sink") == 0
+    assert again == first
+    check_etl()
+
+
+def test_cli_keeps_birth_weight(cli_run):
+    """30% of the landing's admissions are old-format and carry birth weight
+    under ``BW``; it reaches the admissions table, the convenience BWGroup
+    and the ALL table."""
+    wh = cli_run.wh
+    assert wh("admissions").count() > 0
+    assert wh("admissions").filter(F.col("`BirthWeight.value`").isNull()).count() == 0
+    assert wh("convenience").filter(F.col("BWGroup").isNull()).count() == 0
+    assert "BirthWeight.value" in wh("merged_all").columns
 
 
 def test_tidy_requires_field_metadata(spark):
@@ -685,24 +748,6 @@ def test_engine_rejects_renamed_source_key():
                 pivot_keys={"discharges": ["NeoTreeOutcome", "BWTDis"]},
             )
         )
-
-
-def test_cli_keeps_birth_weight(spark, tmp_path):
-    """The CLI's sessions carry birth weight under the old key ``BW``; it
-    reaches the admissions table, the convenience BWGroup and the ALL
-    table."""
-    from conftest import SF_SMOKE
-
-    from neotree_data_pipeline_kedro_spark.__main__ import main
-
-    out = str(tmp_path / "wh")
-    main(argv=["--sf-dir", SF_SMOKE, "--out", out], spark=spark)
-    adm = spark.read.parquet(f"{out}/admissions")
-    assert adm.count() > 0
-    assert adm.filter(F.col("`BirthWeight.value`").isNull()).count() == 0
-    conv = spark.read.parquet(f"{out}/convenience")
-    assert conv.filter(F.col("BWGroup").isNull()).count() == 0
-    assert "BirthWeight.value" in spark.read.parquet(f"{out}/merged_all").columns
 
 
 def test_engine_default_facility_map(spark):
@@ -860,23 +905,3 @@ def test_engine_two_cycle_incremental_delta(tmp_path, spark):
     assert rec["A7C6-0350"]["is_closed"]  # untouched rows keep their state
     assert rec["A7C6-0350"]["has_admission"] and rec["A7C6-0350"]["has_discharge"]
 
-
-def test_cli_compact_mb_compacts_stage_dirs(spark, tmp_path):
-    import glob as g
-
-    from neotree_data_pipeline_kedro_spark.__main__ import main
-
-    out = str(tmp_path / "wh")
-    counts = main(
-        argv=["--sf-dir", "/root/testdata/sf0.001", "--out", out,
-              "--compact-mb", "128"],
-        spark=spark,
-    )
-    # every materialized stage dir exists, is compacted to one file at this
-    # size, and still reads back with the reported row count
-    for name, n in counts.items():
-        files = g.glob(f"{out}/{name}/*.parquet")
-        if not files:
-            continue
-        assert len(files) == 1, (name, files)
-        assert spark.read.parquet(f"{out}/{name}").count() == n

