@@ -6,7 +6,10 @@
 derived schema out. ``--config`` is a JSON object of ``EngineConfig``'s
 fields (the reference's ``conf/``). Under ``--out`` the run writes
 
-- ``warehouse/<stage>``: every Engine stage as parquet, replaced each run;
+- ``warehouse/<stage>``: every Engine stage as parquet. The run writes
+  all of them beside the live warehouse and publishes them as a whole
+  once every stage is written, so a run that fails part-way leaves the
+  last published warehouse as it was;
 - ``bronze_sink``: the deduplicated sessions whose (uid, scriptid) it does
   not hold yet, appended;
 - ``rollup`` (checkpoint ``rollup_ckpt``): sink rows per facility and
@@ -28,6 +31,7 @@ from pyspark.sql import functions as F
 from .plans.pipeline import Engine, EngineConfig
 from .session import get_spark
 from .sources.sessions import read_session_files
+from .sources.warehouse import _publish_swap, _recover_swap, _swap_paths
 from .streaming.incremental import incremental_sink, run_foreach_batch_rollup
 
 
@@ -38,25 +42,30 @@ def run_cron(
     ``landing_glob`` into ``out_dir``: ``read_session_files`` ->
     ``Engine.run`` with every stage written to the warehouse -> bronze sink
     append -> facility x month rollup over the sink. Returns the rows of
-    every stage plus ``bronze_sink``, the rows appended this run."""
+    every stage plus ``bronze_sink``, the rows appended this run. If a
+    stage raises, nothing is published and the sink is not touched."""
+    live = os.path.join(out_dir, "warehouse")
+    _recover_swap(live)
+    staged = _swap_paths(live)[0]
     rows: dict[str, int] = {}
 
     def materialize(name: str, df: DataFrame) -> DataFrame:
         # Called from the Engine's stage threads. The row count rides the
         # write job, and the read-back declares the schema just written,
         # so neither costs a job of its own.
-        path = os.path.join(out_dir, "warehouse", name)
+        path = os.path.join(staged, name)
         seen = Observation()
-        df.observe(seen, F.count(F.lit(1)).alias("rows")).write.mode(
-            "overwrite"
-        ).parquet(path)
+        df.observe(seen, F.count(F.lit(1)).alias("rows")).write.parquet(path)
         rows[name] = seen.get["rows"]
         return spark.read.schema(df.schema).parquet(path)
 
     out = Engine(config, materialize=materialize).run(
         read_session_files(spark, landing_glob)
     )
-    dedup = out["deduplicated"]
+    _publish_swap(live)
+    dedup = spark.read.schema(out["deduplicated"].schema).parquet(
+        os.path.join(live, "deduplicated")
+    )
     sink = os.path.join(out_dir, "bronze_sink")
     appended = incremental_sink(spark, dedup, sink, ["uid", "scriptid"])
     run_foreach_batch_rollup(

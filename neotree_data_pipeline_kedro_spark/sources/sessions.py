@@ -24,6 +24,8 @@ Fidelity notes (divergences are deliberate and documented):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -104,10 +106,15 @@ def read_session_files(
     all per-session field pulls are ``get_json_object`` — no Python in the
     row path, files parallelize across executors.
 
+    A ``path_glob`` that matches nothing raises ``FileNotFoundError``.
+
     Returns ``(id, uid, scriptid, ingested_at, data, src_file)``. ``id`` is
-    a deterministic surrogate (hash of file + position — files carry no
-    ingest sequence); ``ingested_at`` comes from the session's
-    completed/started timestamps when present.
+    the ingest sequence, which ``Engine.deduplicate``'s latest-wins reads
+    (the reference's Postgres serial): the matched files in base-name
+    order (exports are named by date), the full path breaking ties, so
+    ``id = file ordinal * 2^32 + position in the file``. It does not
+    depend on where the landing sits. ``ingested_at`` comes from the
+    session's completed/started timestamps when present.
 
     ``existing_uids``: optional single-column frame of uids already in the
     sink — matching sessions are skipped (the reference's
@@ -115,9 +122,26 @@ def read_session_files(
     """
     from ..functions.timestamps import parse_timestamp_multi
 
-    files = spark.read.text(path_glob, wholetext=True)
+    # Expand the glob here with Hadoop's globStatus, as Spark's reader
+    # would: Spark probes a single read path for a streaming-sink metadata
+    # directory, and a literal glob makes that probe log a
+    # FileNotFoundException stack trace. Spark globs every path it is
+    # given, so glob characters in the matched names are escaped.
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(path_glob)
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    matched = [
+        re.sub(r"[\\{}\[\]*?]", r"\\\g<0>", st.getPath().toString())
+        for st in fs.globStatus(pattern) or ()
+    ]
+    if not matched:
+        raise FileNotFoundError(f"no file matches {path_glob}")
+    files = spark.read.text(matched, wholetext=True)
+    # inputFiles() reads the listing the read already made (no job), in
+    # the URI form input_file_name() returns
+    ordered = sorted(files.inputFiles(), key=lambda u: (u.rsplit("/", 1)[-1], u))
     sess = files.select(
         F.input_file_name().alias("src_file"),
+        F.array_position(F.lit(ordered), F.input_file_name()).alias("ordinal"),
         F.posexplode(
             F.from_json("value", "STRUCT<sessions: ARRAY<STRING>>")["sessions"]
         ).alias("pos", "data"),
@@ -135,7 +159,7 @@ def read_session_files(
         F.get_json_object("data", "$.entries"),
     )
     out = (
-        sess.withColumn("id", F.xxhash64("src_file", "pos"))
+        sess.withColumn("id", F.shiftleft("ordinal", 32) + F.col("pos"))
         .withColumn("uid", uid)
         .withColumn("scriptid", scriptid)
         .withColumn(

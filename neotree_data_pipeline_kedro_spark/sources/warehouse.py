@@ -1,12 +1,9 @@
-"""Warehouse storage helpers: the directory swap, the snapshot store,
-file-level min/max pruning, format round-trips and compaction planning.
+"""Warehouse storage helpers: the directory swap, file-level min/max
+pruning, format round-trips and compaction planning.
 
 - The crash-safe directory swap (``_swap_paths`` / ``_recover_swap`` /
   ``_publish_swap``) is the package's one way to replace a directory in
-  place; the streaming rollup state goes through it.
-- The snapshot store (``write_snapshot`` ... ``write_audit_publish``) keeps
-  immutable ``v=N`` versions behind one ``_LATEST`` pointer, the
-  write-audit-publish pattern of Iceberg.
+  place; the CLI's warehouse and the streaming rollup state go through it.
 - ``file_minmax_stats`` / ``minmax_prune_scan`` skip the files whose
   min/max range misses a predicate, the way a lakehouse manifest does.
 - ``roundtrip_format`` writes a frame through ORC (or another columnar
@@ -18,7 +15,6 @@ file-level min/max pruning, format round-trips and compaction planning.
 from __future__ import annotations
 
 import os
-import re
 import shutil
 from collections.abc import Sequence
 
@@ -27,8 +23,8 @@ from pyspark.sql import functions as F
 
 
 # ------------------------------------------------------------------ swap
-# The package's one way to replace a directory in place (the streaming
-# rollup state): write the new contents to the
+# The package's one way to replace a directory in place (the CLI's
+# warehouse, the streaming rollup state): write the new contents to the
 # ``<live>.__rollup_tmp`` sibling, then (live -> ``.__rollup_old``) ->
 # (tmp -> live) -> rm old. A crash at any point leaves the live dir or its
 # old sibling on disk, never neither; every caller runs ``_recover_swap``
@@ -136,149 +132,6 @@ def minmax_prune_scan(
         len(keep),
         len(stats),
     )
-
-
-def write_snapshot(df: DataFrame, base_dir: str, fmt: str = "parquet") -> int:
-    """Versioned snapshot write (time travel): ``stage_snapshot`` lands a
-    complete immutable copy under ``base_dir/v=N``, then
-    ``publish_snapshot`` atomically flips the ``_LATEST`` pointer —
-    readers either see the previous snapshot or the new one, never a
-    half-written directory. Returns the new version number.
-
-    This is the poor-man's table format: what Iceberg/Delta do with
-    manifests, reduced to "directory per version + one pointer file" —
-    enough for reproducible training runs ("read the corpus exactly as
-    it was for run 17"), diffable snapshots (j14_table_diff between two
-    versions), and safe concurrent readers during writes. Full copies
-    per version: use for dimension/summary-sized tables, not the raw
-    fact layer.
-    """
-    version = stage_snapshot(df, base_dir, fmt)
-    publish_snapshot(base_dir, version)
-    return version
-
-
-def read_snapshot_version(base_dir: str) -> int | None:
-    """Current published version per the ``_LATEST`` pointer (None when
-    the table has never been published)."""
-    p = os.path.join(base_dir, "_LATEST")
-    if not os.path.exists(p):
-        return None
-    with open(p, encoding="utf-8") as fh:
-        return int(fh.read().strip())
-
-
-def read_snapshot(
-    spark: SparkSession,
-    base_dir: str,
-    version: int | None = None,
-    fmt: str = "parquet",
-) -> DataFrame:
-    """Time-travel read: ``version=None`` resolves the ``_LATEST``
-    pointer; an explicit version pins a historical snapshot (raises if
-    it was vacuumed). Resolution is one pointer-file read — no listing
-    of the table directory, so resolution cost is independent of
-    history length."""
-    if version is None:
-        version = read_snapshot_version(base_dir)
-        if version is None:
-            raise FileNotFoundError(f"no published snapshot under {base_dir}")
-    vdir = os.path.join(base_dir, f"v={version}")
-    if not os.path.isdir(vdir):
-        raise FileNotFoundError(f"snapshot v={version} not found (vacuumed?)")
-    return spark.read.format(fmt).load(vdir)
-
-
-def vacuum_snapshots(base_dir: str, keep: int = 2) -> list[int]:
-    """Retention: delete all but the newest ``keep`` versions (never the
-    published one). Returns the removed version numbers. Deletion order
-    is oldest-first so a crash mid-vacuum leaves a contiguous recent
-    history."""
-    current = read_snapshot_version(base_dir)
-    versions = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(base_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    )
-    doomed = [
-        v for v in versions[: max(0, len(versions) - keep)] if v != current
-    ]
-    for v in doomed:
-        shutil.rmtree(os.path.join(base_dir, f"v={v}"))
-    return doomed
-
-
-def stage_snapshot(df: DataFrame, base_dir: str, fmt: str = "parquet") -> int:
-    """WRITE leg of write-audit-publish: land a complete immutable
-    ``v=N`` directory WITHOUT flipping ``_LATEST`` — readers keep seeing
-    the published snapshot while audits run against the staged one. The
-    version is allocated past every existing ``v=`` directory (published
-    or staged), so concurrent stages cannot collide with the pointer."""
-    os.makedirs(base_dir, exist_ok=True)
-    existing = [
-        int(m.group(1))
-        for d in os.listdir(base_dir)
-        if (m := re.fullmatch(r"v=(\d+)", d))
-    ]
-    version = (max(existing) if existing else -1) + 1
-    df.write.format(fmt).mode("errorifexists").save(
-        os.path.join(base_dir, f"v={version}")
-    )
-    return version
-
-
-def publish_snapshot(base_dir: str, version: int) -> None:
-    """PUBLISH leg: atomically flip ``_LATEST`` to a previously staged
-    version (write the pointer to a temp file, then ``os.replace``)."""
-    if not os.path.isdir(os.path.join(base_dir, f"v={version}")):
-        raise FileNotFoundError(
-            f"publish_snapshot: staged directory v={version} missing "
-            f"under {base_dir!r}"
-        )
-    tmp = os.path.join(base_dir, "_LATEST.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(base_dir, "_LATEST"))
-
-
-def abort_snapshot(base_dir: str, version: int) -> None:
-    """Discard a staged version. Refuses to remove the PUBLISHED one —
-    an abort must never take the live table away from readers."""
-    if read_snapshot_version(base_dir) == version:
-        raise ValueError(
-            f"abort_snapshot: v={version} is published; aborting it would "
-            "remove the live snapshot"
-        )
-    vdir = os.path.join(base_dir, f"v={version}")
-    if os.path.isdir(vdir):
-        shutil.rmtree(vdir)
-
-
-def write_audit_publish(
-    spark: SparkSession,
-    df: DataFrame,
-    base_dir: str,
-    audits,
-    fmt: str = "parquet",
-) -> tuple[int, bool, list[str]]:
-    """Write-audit-publish (the Iceberg WAP pattern on the snapshot
-    store): stage the snapshot, run every audit against the STAGED
-    files (re-read, so audits see exactly what readers would), and flip
-    the pointer only if all pass — a failing audit aborts the stage and
-    the published table is untouched. ``audits`` is a sequence of
-    callables ``DataFrame -> str | None`` returning a failure message
-    or None; all audits run (the report lists every failure, not just
-    the first). Returns (version, published, failures)."""
-    version = stage_snapshot(df, base_dir, fmt)
-    staged = spark.read.format(fmt).load(
-        os.path.join(base_dir, f"v={version}")
-    )
-    failures = [msg for a in audits if (msg := a(staged)) is not None]
-    if failures:
-        abort_snapshot(base_dir, version)
-        return version, False, failures
-    publish_snapshot(base_dir, version)
-    return version, True, []
 
 
 def compaction_bins(

@@ -27,15 +27,6 @@ PKG = REPO / "neotree_data_pipeline_kedro_spark"
 # Unreachable definitions that stay, each with its reason. This list may
 # only shrink: a new entry needs a product use, not a line here.
 ALLOWED_UNREACHABLE = {
-    # the snapshot store that ROADMAP item 1's warehouse publish builds on
-    "sources/warehouse.py:write_snapshot": "ROADMAP item 1",
-    "sources/warehouse.py:read_snapshot_version": "ROADMAP item 1",
-    "sources/warehouse.py:read_snapshot": "ROADMAP item 1",
-    "sources/warehouse.py:vacuum_snapshots": "ROADMAP item 1",
-    "sources/warehouse.py:stage_snapshot": "ROADMAP item 1",
-    "sources/warehouse.py:publish_snapshot": "ROADMAP item 1",
-    "sources/warehouse.py:abort_snapshot": "ROADMAP item 1",
-    "sources/warehouse.py:write_audit_publish": "ROADMAP item 1",
     # the pure-Python twin tests/test_zorder.py checks morton2 against
     "functions/zorder.py:morton2_py": "test reference twin",
 }

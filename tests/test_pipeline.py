@@ -403,6 +403,82 @@ def test_engine_files_to_warehouse_integration(tmp_path, spark):
     assert allt["B111-0001"]["match_status"] == "unmatched_admission"
 
 
+def _export(path, *sessions):
+    """One export file of ``(uid, script, birth weight, completed_at)``
+    sessions."""
+    path.write_text(json.dumps({"sessions": [
+        {"uid": uid, "script": {"id": script}, "completed_at": at,
+         "entries": json.loads(_new_entries(uid, 34, bw, "Outcome", "DC"))["entries"]}
+        for uid, script, bw, at in sessions
+    ]}))
+
+
+def test_later_upload_wins_wherever_the_landing_sits(spark, tmp_path):
+    """Two uploads of one session, in the exports of two days: dedup keeps
+    the later one under every directory name. ``id`` is the ingest
+    sequence, not a hash of the file's path."""
+    from neotree_data_pipeline_kedro_spark.sources.sessions import read_session_files
+
+    eng = _engine()
+    for k in range(8):
+        landing = tmp_path / f"landing{k}"
+        landing.mkdir()
+        _export(landing / "export_2024-01-01.json",
+                ("A7C6-0350", ADM_SCRIPT, 1000, "2024-01-01T10:00:00"))
+        _export(landing / "export_2024-01-02.json",
+                ("A7C6-0350", ADM_SCRIPT, 2000, "2024-01-02T10:00:00"))
+        kept = eng.deduplicate(
+            eng.import_raw(read_session_files(spark, str(landing / "*.json")))
+        ).select(F.get_json_object("entries", "$.BW.values.value[0]"))
+        assert [r[0] for r in kept.collect()] == ["2000"], landing.name
+
+
+def test_read_session_files_expands_the_glob(spark, tmp_path):
+    """The glob is expanded before the read: names that hold glob
+    characters are read as themselves, and a glob with no match raises."""
+    from neotree_data_pipeline_kedro_spark.sources.sessions import read_session_files
+
+    _export(tmp_path / "export[1].json",
+            ("A7C6-0350", ADM_SCRIPT, 1000, "2024-01-01T10:00:00"))
+    _export(tmp_path / "export{2}.json",
+            ("B111-0001", ADM_SCRIPT, 900, "2024-01-01T10:00:00"))
+    got = read_session_files(spark, str(tmp_path / "*.json")).collect()
+    assert sorted((r.uid, r.src_file.rsplit("/", 1)[1]) for r in got) == [
+        ("A7C6-0350", "export%5B1%5D.json"), ("B111-0001", "export%7B2%7D.json")]
+    with pytest.raises(FileNotFoundError):
+        read_session_files(spark, str(tmp_path / "*.csv"))
+
+
+def test_copied_landing_gives_the_same_tables(spark, tmp_path):
+    """The same exports under two directory names give the same 15 stage
+    tables: no column but ``src_file`` depends on where the landing sits."""
+    import shutil
+
+    from perfbench.workloads import table_checksum
+
+    from neotree_data_pipeline_kedro_spark.__main__ import run_cron
+
+    first = tmp_path / "landing"
+    first.mkdir()
+    _export(first / "export_adm.json",
+            ("A7C6-0350", ADM_SCRIPT, 2100, "2024-03-01T10:00:00"),
+            ("A7C6-0350", ADM_SCRIPT, 2100, "2024-03-01T10:00:00"),
+            ("B111-0001", ADM_SCRIPT, 900, "2024-03-01T11:00:00"))
+    _export(first / "export_dis.json",
+            ("A7C6-0350", DIS_SCRIPT, 2100, "2024-03-05T10:00:00"))
+    shutil.copytree(first, tmp_path / "moved" / "elsewhere")
+    checksums = []
+    for landing in (first, tmp_path / "moved" / "elsewhere"):
+        out = landing.parent / "out"
+        rows = run_cron(spark, str(landing / "*.json"), str(out), _engine().config)
+        checksums.append({
+            name: table_checksum(spark.read.parquet(str(out / "warehouse" / name)))
+            for name in STAGE_INPUTS
+        })
+        assert rows["joined"] == 2 and rows["bronze_sink"] == 3
+    assert checksums[0] == checksums[1]
+
+
 @pytest.fixture(scope="module")
 def stage_plans(spark, tmp_path_factory):
     """Physical plan of every stage Engine.run hands to a parquet
@@ -689,6 +765,77 @@ def test_cli_keeps_birth_weight(cli_run):
     assert wh("admissions").filter(F.col("`BirthWeight.value`").isNull()).count() == 0
     assert wh("convenience").filter(F.col("BWGroup").isNull()).count() == 0
     assert "BirthWeight.value" in wh("merged_all").columns
+
+
+def test_cli_failed_run_leaves_the_published_warehouse(spark, cli_run, monkeypatch):
+    """A stage that raises fails the run before anything is published:
+    every file under ``--out`` keeps its bytes. The next run purges the
+    staged tables and publishes the same warehouse."""
+    import hashlib
+
+    from neotree_data_pipeline_kedro_spark.__main__ import main
+
+    out = cli_run.out
+    staged = out / "warehouse.__rollup_tmp"
+
+    def digests():
+        return {
+            str(p.relative_to(out)): hashlib.md5(p.read_bytes()).hexdigest()
+            for p in out.rglob("*")
+            if p.is_file() and staged not in p.parents
+        }
+
+    before = digests()
+    assert any(k.startswith("warehouse/merged_all/") for k in before)
+
+    class Boom(RuntimeError):
+        pass
+
+    def merge_all(self, adm, dis):
+        raise Boom("merge_all")
+
+    monkeypatch.setattr(Engine, "merge_all", merge_all)
+    with pytest.raises(Boom):
+        main(cli_run.argv, spark=spark)
+    assert digests() == before
+
+    monkeypatch.undo()
+    again = main(cli_run.argv, spark=spark)
+    assert again.pop("bronze_sink") == 0
+    assert again == {k: v for k, v in cli_run.first.items() if k != "bronze_sink"}
+    assert not staged.exists()
+
+
+def test_cli_logs_no_missing_file_trace(tmp_path):
+    """``python -m neotree_data_pipeline_kedro_spark`` in a process of its
+    own: the run succeeds, and its stderr carries no Java
+    ``FileNotFoundException`` (Spark's metadata-directory probe of a
+    literal glob logged one on every run)."""
+    import os
+    import subprocess
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _export(landing / "export_adm.json",
+            ("A7C6-0350", ADM_SCRIPT, 2100, "2024-03-01T10:00:00"))
+    _export(landing / "export_dis.json",
+            ("A7C6-0350", DIS_SCRIPT, 2100, "2024-03-05T10:00:00"))
+    (tmp_path / "engine.json").write_text(json.dumps({
+        "scripts": _engine().config.scripts,
+        "facility_map": _engine().config.facility_map,
+        "field_info": FIELD_INFO,
+    }))
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_DRIVER_MEMORY": "1g"}
+    proc = subprocess.run(
+        [sys.executable, "-m", "neotree_data_pipeline_kedro_spark",
+         "--landing", str(landing / "*.json"), "--out", str(tmp_path / "out"),
+         "--config", str(tmp_path / "engine.json")],
+        capture_output=True, text=True, env=env, timeout=600,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert json.loads(proc.stdout.splitlines()[-1])["rows"]["merged_all"] == 1
+    assert "FileNotFoundException" not in proc.stderr
 
 
 def test_tidy_requires_field_metadata(spark):

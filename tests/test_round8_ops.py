@@ -806,59 +806,6 @@ def test_dag_layers_longest_path_and_cycle_guard(spark):
         dag_layers(cyc, max_iters=8)
 
 
-# -------------------------------------------- write-audit-publish
-def test_write_audit_publish_lifecycle(spark, tmp_path):
-    from neotree_data_pipeline_kedro_spark.sources.warehouse import (
-        abort_snapshot,
-        read_snapshot,
-        read_snapshot_version,
-        write_audit_publish,
-        write_snapshot,
-    )
-
-    base = str(tmp_path / "tbl")
-    v0 = write_snapshot(
-        spark.createDataFrame([(1, "a")], "k bigint, s string"), base
-    )
-    assert read_snapshot_version(base) == v0
-
-    def no_nulls(df):
-        n = df.filter("s IS NULL").count()
-        return f"{n} null s rows" if n else None
-
-    def min_rows(df):
-        return None if df.count() >= 2 else "too few rows"
-
-    # failing audit: staged version aborted, readers untouched
-    bad = spark.createDataFrame([(2, None)], "k bigint, s string")
-    v, published, failures = write_audit_publish(
-        spark, bad, base, [no_nulls, min_rows]
-    )
-    assert not published and len(failures) == 2  # ALL failures reported
-    assert read_snapshot_version(base) == v0
-    assert read_snapshot(spark, base).count() == 1
-    import os
-    assert not os.path.isdir(os.path.join(base, f"v={v}"))
-
-    # passing audits: atomic publish
-    good = spark.createDataFrame(
-        [(2, "b"), (3, "c")], "k bigint, s string"
-    )
-    v2, published2, failures2 = write_audit_publish(
-        spark, good, base, [no_nulls, min_rows]
-    )
-    assert published2 and not failures2
-    assert read_snapshot_version(base) == v2 > v0
-    assert read_snapshot(spark, base).count() == 2
-    # time travel to the pre-WAP version still works
-    assert read_snapshot(spark, base, version=v0).count() == 1
-
-    # abort refuses to delete the published version
-    import pytest
-    with pytest.raises(ValueError, match="published"):
-        abort_snapshot(base, v2)
-
-
 # ----------------------------------------- CUPED + mahalanobis
 def test_cuped_reduces_variance(spark):
     from neotree_data_pipeline_kedro_spark.plans.queries import QUERIES
